@@ -37,6 +37,10 @@ from tsdownsample_spark.kernels.selectors import (  # noqa: F401
     minmax,
     minmaxlttb,
 )
+from tsdownsample_spark.worker_init import install_on_worker as _install_on_worker
+
+# on a Python worker, later tasks skip re-parsing unchanged zip imports
+_install_on_worker()
 
 # the reference's public __all__ (tsdownsample/__init__.py), verbatim, plus
 # the kernel-level functional API

@@ -378,12 +378,13 @@ def ivf_ann_topk(
         "_nv", F.expr(_norm_expr(vec_col))
     )
     p = (
-        probes.withColumn(
+        probes.withColumn("_np", F.expr(_norm_expr(vec_col)))
+        .withColumn(
             "cell", F.explode(F.expr(probe_cells_expr(vec_col, cents, nprobe)))
         )
         .select(
             F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec"),
-            "cell", F.expr(_norm_expr(vec_col)).alias("_np"),
+            "cell", "_np",
         )
     )
     joined = v.alias("v").join(
@@ -473,14 +474,15 @@ def lsh_ann_topk(
         "_nv", F.expr(_norm_expr(vec_col))
     )
     p = (
-        probes.withColumn(
+        probes.withColumn("_np", F.expr(_norm_expr(vec_col)))
+        .withColumn(
             "bucket", F.explode(F.expr(probe_buckets_expr(vec_col, planes, nprobe)))
         )
         .select(
             F.col(id_col).alias("probe_id"),
             F.col(vec_col).alias("probe_vec"),
             "bucket",
-            F.expr(_norm_expr(vec_col)).alias("_np"),
+            "_np",
         )
     )
     joined = v.alias("v").join(

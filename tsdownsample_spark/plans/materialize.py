@@ -20,8 +20,11 @@ Mechanics and constraints:
   downstream stages never race to compute it.
 * This is per-invocation work: every call recomputes from its input —
   nothing persists across bench/oracle runs, and results are
-  bit-identical (materialization only, no arithmetic change).  Blocks
-  are freed by the ContextCleaner once the DataFrame is unreachable.
+  bit-identical (materialization only, no arithmetic change).  The
+  frames stay cached until ``release_materialized()`` runs — dropping
+  the DataFrame does not free them, since Spark's CacheManager keeps
+  its own reference.  The query loaders call it; a library caller that
+  uses the operators directly must call it once the results are in.
 * Batch-only: calling it on a streaming DataFrame is an error by
   construction (persist is unsupported there) — keep it out of
   foreachBatch-external streaming lineage.
