@@ -1,6 +1,8 @@
 """Physical-plan audits: the properties the engine's scale story depends on
 must be visible in `.explain` output, not just claimed."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,6 +122,37 @@ def test_long_selector_shuffle_free_on_bucketed_source(spark, sf_dir, tmp_path):
         assert got == exp
     finally:
         spark.sql("DROP TABLE IF EXISTS ev_bucketed_test")
+
+
+@pytest.mark.parametrize("fn_name", ["minmax_x_long", "m4_x_long"])
+def test_x_long_one_window_lineage_no_cache(spark, sf_dir, fn_name):
+    """The with-x MinMax/M4 selectors run as one window lineage: no cached
+    base (no InMemoryRelation/InMemoryTableScan), ONE shuffle on the series
+    key, and the integer-x collision-fallback branch reads that shuffle as a
+    ReusedExchange instead of rescanning; nothing is left in the session's
+    CacheManager once the result is collected."""
+    from tsdownsample_spark.operators import sql_selectors as S
+
+    spark.catalog.clearCache()  # earlier tests' caches are not under test
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        "value",
+        "event_id",
+    )
+    out = getattr(S, fn_name)(
+        ev, 40, x_col="ts_us", by=["event_type"], y_col="value",
+        tiebreak=["event_id"],
+    )
+    assert out.collect()
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert "InMemoryRelation" not in final, final
+    assert "InMemoryTableScan" not in final, final
+    nodes = [re.sub(r"^[\s:|+\-]*", "", line) for line in final.splitlines()]
+    assert sum(n.startswith("Exchange ") for n in nodes) == 1, final
+    assert sum(n.startswith("ReusedExchange ") for n in nodes) == 1, final
+    assert "FlatMapGroupsInPandas" in final  # the fallback branch is planned
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_token_tier_cascade_is_shuffle_free(spark):

@@ -119,8 +119,11 @@ def test_minmax_long_bounded_plan(long_df):
 @pytest.mark.parametrize("algo", ["minmax", "m4"])
 def test_x_long_matches_kernel(spark, algo):
     """Distributed equidistant (with-x) selectors vs the kernel on: float x,
-    gapped int x (empty bins), and int arange (max exactly on the truncated
-    last edge — the common integer-x collision)."""
+    gapped int x (empty bins), int arange (max exactly on the truncated
+    last edge — the common integer-x collision), monotone y (M4's first is
+    the min and its last the max in every bin: duplicate indices), constant
+    y (argmin == argmax) and a 15 s-cadence microsecond timestamp series;
+    every series is run once with bigint x and once with timestamp_ntz x."""
     from tsdownsample_spark.operators.sql_selectors import m4_x_long, minmax_x_long
 
     rng = np.random.default_rng(23)
@@ -134,6 +137,12 @@ def test_x_long_matches_kernel(spark, algo):
     series["gapint"] = (xg.astype(np.float64), rng.normal(size=n).round(6))
     xa = np.arange(2_000, dtype=np.int64) * 7  # last edge == max (trunc)
     series["arange"] = (xa.astype(np.float64), rng.normal(size=2_000).round(6))
+    xm = np.sort(rng.choice(10**9, size=n, replace=False))
+    series["monotone"] = (xm.astype(np.float64), np.sort(rng.normal(size=n)).round(6))
+    series["consty"] = (xm.astype(np.float64), np.full(n, 0.5))
+    step = 15_000_000 + rng.integers(-10_000_000, 10_000_000, size=n)
+    xt = 1_700_000_000_000_000 + np.cumsum(step)
+    series["ts"] = (xt.astype(np.float64), rng.normal(size=n).round(6))
 
     frames = []
     for key, (x, y) in series.items():
@@ -144,17 +153,22 @@ def test_x_long_matches_kernel(spark, algo):
     df = spark.createDataFrame(pdf.sample(frac=1.0, random_state=1)).repartition(8)
 
     fn = minmax_x_long if algo == "minmax" else m4_x_long
-    got = sorted(
-        (r["series"], r["sel_idx"]) for r in
-        fn(df, 40, x_col="x", by=["series"], y_col="value").collect()
-    )
     exp = []
     for key, (x, y) in series.items():
         idx = downsample_array(
             np.asarray(y), 40, algo=algo, x=np.asarray(x).astype(np.int64)
         )
         exp.extend((key, int(i)) for i in idx)
-    assert got == sorted(exp)
+    # timestamp_ntz x bins on its integer microseconds (the perfbench
+    # ts_rollup shape), so the kernel's int64 expectation holds unchanged
+    ntz = df.withColumn("x", F.expr("CAST(timestamp_micros(x) AS TIMESTAMP_NTZ)"))
+    assert ntz.schema["x"].dataType.simpleString() == "timestamp_ntz"
+    for sdf in (df, ntz):
+        got = sorted(
+            (r["series"], r["sel_idx"]) for r in
+            fn(sdf, 40, x_col="x", by=["series"], y_col="value").collect()
+        )
+        assert got == sorted(exp)
 
 
 @pytest.mark.parametrize("algo", ["minmax", "m4"])

@@ -26,18 +26,23 @@ Selected-index parity with kernels.selectors is exact (same binning rule,
 same first-occurrence ties, same LTTB float op order — tested in
 tests/test_sql_selectors.py).
 
-Plan shape (audited via .explain): the identity/pass-through branches are
-plain UNIONs, and Catalyst does not share subtrees across union branches —
-left alone, each branch re-runs the scan + rank window (r6 audit:
-q_minmaxlttb_x_long = 6 parquet scans / 13 sorts).  Since r6 the branching
-selectors therefore ``_materialize`` (``plans.materialize.materialize_shared``:
-persist + eager count) their ranked base once per invocation and every
-branch reads the cached blocks; ``everynth_long`` (single-consumer
-projection) deliberately does not.
-The expensive parts stay single either way — ONE rank exchange and ONE
-partially-aggregated groupBy — and both disappear when the source table is
-bucketed+sorted by the series key (the cached plan's scan preserves
-outputPartitioning/ordering; verified:
+Plan shape (audited via .explain): ``minmax_x_long`` / ``m4_x_long`` are ONE
+window lineage — rank window, one per-(series, bin) aggregate Window, the
+collision-flag window — ending in a per-point multiplicity explode; their
+only second consumer, the integer-x collision fallback, reads the same
+shuffle as a ReusedExchange (pinned:
+tests/test_plans.py::test_x_long_one_window_lineage_no_cache).  The other
+branching selectors (``minmax_long``, ``m4_long``, ``minmaxlttb_long``,
+``minmaxlttb_x_long``) emit plain UNIONs of identity/pass-through
+branches, and Catalyst does not share subtrees across union branches — left
+alone, each branch re-runs the scan + rank window (r6 audit:
+q_minmaxlttb_x_long = 6 parquet scans / 13 sorts) — so they
+``_materialize`` (``plans.materialize.materialize_shared``: persist + eager
+count) their ranked base once per invocation and every branch reads the
+cached blocks; ``everynth_long`` (single-consumer projection) does not.
+The rank exchange stays single either way, and it disappears when the
+source table is bucketed+sorted by the series key (the cached plan's scan
+preserves outputPartitioning/ordering; verified:
 tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source
 shows a zero-Exchange plan with identical results).
 
@@ -334,8 +339,11 @@ def _x_bin_expr(m: int, x_is_int: bool) -> str:
     (the order-dependent empty-bin push, searchsorted.rs:112-127) or a
     duplicate x sitting exactly on an edge (bisect consumes only the FIRST
     equal element).  Callers detect those series (_collision_flag) and
-    reroute them to the kernel; for continuous x (floats, microsecond
-    timestamps) edge collisions do not occur at all.
+    reroute them to the kernel.  Timestamps are NOT exempt: _x_numeric bins
+    them on integer microseconds with truncated edges, so they collide like
+    integer x and detection runs for them; only float x (untruncated
+    edges, where an exact edge hit is a measure-zero event) skips it under
+    the default policy.
     """
     edge = _x_edge_tmpl(m, x_is_int)
     step = f"((xn / CAST({m} AS DOUBLE)) - (x0 / CAST({m} AS DOUBLE)))"
@@ -394,23 +402,30 @@ def _downsample_x_long(
     collision_policy: str = "auto",
 ) -> DataFrame:
     """Shared body for minmax_x_long (k=2) / m4_x_long (k=4): equidistant
-    x-value bins computed per point, grouped aggregation per (series, bin);
+    x-value bins computed per point, per-(series, bin) window aggregates;
     bins with <= k points pass all points through; empty bins emit nothing.
     Output matches the kernel queries: (by..., sel_idx, x_col, y_col).
 
+    One window lineage, no union of rescans: every point learns its bin's
+    count, first/last rn and first-occurrence argmin/argmax from ONE Window
+    operator, then is emitted as many times as the slots it fills (first,
+    lo, hi, last for M4; lo, hi for MinMax — a point filling two slots is
+    emitted twice, exactly like the kernel's duplicate indices).
+
     ``collision_policy`` controls edge-collision handling (see
     _collision_flag): "auto" (default) detects and kernel-reroutes collided
-    series when x is integer-typed — where truncated edges make collisions
-    realistic — and skips detection for continuous x; "exact" always
-    detects; "assume_clean" never does (the detection windows are free, but
-    the fallback union branch re-shuffles the source once more on
-    non-bucketed inputs, so continuous-x callers shouldn't pay it).
+    series when x is integer-typed or a timestamp — both bin on truncated
+    integer edges (_x_numeric), where collisions are realistic — and skips
+    detection for float x; "exact" always detects; "assume_clean" never
+    does (the detection window is cheap, but the fallback branch re-runs
+    the local sort + windows over the shuffled source, so float-x callers
+    shouldn't pay it).  The fallback reads the same exchange as the main
+    branch (planned as a ReusedExchange): no second scan or shuffle.
 
     ``nan="return"`` gives the NaN* with-x semantics (reference instantiates
     NaN with-x kernels at minmax.rs:72-74 / m4.rs:70-72): a bin with any NaN
-    returns its FIRST NaN for both the min and max slot — the same
-    decomposable min-rn-over-NaN aggregate as the no-x path, here carrying
-    (rn, x) so the x value rides along.  Passthrough bins (<= k points) emit
+    returns its FIRST NaN for both the min and max slot — one more
+    min-rn-over-NaN window aggregate.  Passthrough bins (<= k points) emit
     all points regardless of NaN, exactly like the kernel's small-bin rule.
     """
     by = list(by)
@@ -418,6 +433,7 @@ def _downsample_x_long(
     order = [x_col, *tiebreak]
     wo = Window.partitionBy(*by).orderBy(*order)
     wp = Window.partitionBy(*by)
+    wb = Window.partitionBy(*by, "bin")
     x_num, x_is_int = _x_numeric(df, x_col)
     pts = df.select(
         *by,
@@ -429,124 +445,67 @@ def _downsample_x_long(
         F.min(x_num).over(wp).alias("x0"),
         F.max(x_num).over(wp).alias("xn"),
         F.col(y_col).cast("double").alias("v"),
+    ).withColumn("bin", F.expr(_x_bin_expr(m, x_is_int)))
+    # every per-(series, bin) aggregate in one select -> one Window operator.
+    # First occurrence is embedded in the ordering: min(struct(v, rn)) picks
+    # (min v, min rn); max(struct(v, -rn)) picks (max v, min rn).
+    mn_rn = F.min(F.struct("v", "rn")).over(wb)["rn"]
+    mx_rn = -F.max(F.struct(F.col("v"), (-F.col("rn")).alias("nrn"))).over(wb)["nrn"]
+    if nan == "return":
+        nan_rn = F.min(F.when(F.isnan("v"), F.col("rn"))).over(wb)
+        mn_rn, mx_rn = F.coalesce(nan_rn, mn_rn), F.coalesce(nan_rn, mx_rn)
+    pts = pts.select(
+        "*",
+        F.count("*").over(wb).alias("cnt"),
+        F.min("rn").over(wb).alias("bin_min_rn"),
+        F.max("rn").over(wb).alias("bin_max_rn"),
+        mn_rn.alias("mn_rn"),
+        mx_rn.alias("mx_rn"),
     )
-    pts = _materialize(pts)
-    small_series = pts.filter(F.col("n") <= n_out).select(
-        *by, F.col("rn").cast("long").alias("sel_idx"), F.col(x_col), F.col("v").alias(y_col)
-    )
-    big = pts.filter(F.col("n") > n_out).withColumn(
-        "bin", F.expr(_x_bin_expr(m, x_is_int))
-    )
-    wb = Window.partitionBy(*by, "bin")
-    big = big.withColumn("cnt", F.count("*").over(wb))
+    # Edge-collision detection: series where the closed form would diverge
+    # from the reference's sequential push are routed whole to the kernel
+    # (normally ZERO series — the flag window rides the existing hash(by)
+    # distribution, no extra exchange).
     detect = collision_policy == "exact" or (
         collision_policy == "auto" and x_is_int
     )
-    collided = None
     if detect:
-        # Edge-collision detection: series where the closed form would
-        # diverge from the reference's sequential push are routed whole to
-        # the kernel (normally ZERO series — the flag windows ride the
-        # existing hash(by) distribution, no extra exchange for detection).
-        big = big.withColumn("bin_min_rn", F.min("rn").over(wb)).withColumn(
+        pts = pts.withColumn(
             "_dvg",
             F.max(
                 F.coalesce(_collision_flag(m, x_is_int).cast("int"), F.lit(0))
             ).over(wp),
         )
-        collided = big.filter(F.col("_dvg") == 1)
-        big = big.filter(F.col("_dvg") == 0)
-    # bin == m means strictly past the truncated last edge -> the reference
-    # drops the point (trailing-drop); edge-EQUAL points already landed in
-    # bin m-1 via the <=-rule in _x_bin_expr.
-    big = big.filter(F.col("bin") < m)
-    passthrough = big.filter(F.col("cnt") <= k).select(
-        *by, F.col("rn").cast("long").alias("sel_idx"), F.col(x_col), F.col("v").alias(y_col)
+    slots = ["mn_rn", "mx_rn"] if k == 2 else ["bin_min_rn", "mn_rn", "mx_rn", "bin_max_rn"]
+    # how many output slots a point fills.  bin == m means strictly past the
+    # truncated last edge -> the reference drops the point (trailing-drop);
+    # edge-EQUAL points already landed in bin m-1 via the <=-rule in
+    # _x_bin_expr.
+    mult = (
+        f"CASE WHEN n <= {n_out} THEN 1 "
+        + ("WHEN _dvg = 1 THEN 0 " if detect else "")
+        + f"WHEN bin >= {m} THEN 0 WHEN cnt <= {k} THEN 1 ELSE "
+        + " + ".join(f"CAST(rn = {s} AS INT)" for s in slots)
+        + " END"
     )
-    # x rides inside the aggregate structs (after rn, which is unique per
-    # series, so it never affects the ordering) — no rejoin shuffle needed
-    binned = (
-        big.filter(F.col("cnt") > k)
-        .groupBy(*by, "bin")
-        .agg(
-            F.min(F.struct(F.col("v"), F.col("rn"), F.col(x_col).alias("x"))).alias("mn"),
-            F.max(
-                F.struct(F.col("v"), (-F.col("rn")).alias("nrn"), F.col(x_col).alias("x"))
-            ).alias("mx"),
-            F.min(F.struct(F.col("rn"), F.col("v"), F.col(x_col).alias("x"))).alias("fst"),
-            F.max(F.struct(F.col("rn"), F.col("v"), F.col(x_col).alias("x"))).alias("lst"),
-            F.min(
-                F.when(F.isnan("v"), F.struct(F.col("rn"), F.col(x_col).alias("x")))
-            ).alias("nanfst"),
-        )
-        .withColumn("mn_rn", F.col("mn.rn"))
-        .withColumn("mx_rn", -F.col("mx.nrn"))
-    )
-    if nan == "return":
-        nan_v = F.expr("CAST('NaN' AS DOUBLE)")
-        has = F.col("nanfst").isNotNull()
-        binned = (
-            binned.withColumn("mn_rn", F.when(has, F.col("nanfst.rn")).otherwise(F.col("mn_rn")))
-            .withColumn("mx_rn", F.when(has, F.col("nanfst.rn")).otherwise(F.col("mx_rn")))
-            .withColumn(
-                "mn",
-                F.when(
-                    has,
-                    F.struct(
-                        nan_v.alias("v"),
-                        F.col("nanfst.rn").alias("rn"),
-                        F.col("nanfst.x").alias("x"),
-                    ),
-                ).otherwise(F.col("mn")),
-            )
-            .withColumn(
-                "mx",
-                F.when(
-                    has,
-                    F.struct(
-                        nan_v.alias("v"),
-                        (-F.col("nanfst.rn")).alias("nrn"),
-                        F.col("nanfst.x").alias("x"),
-                    ),
-                ).otherwise(F.col("mx")),
-            )
-        )
-    lo = F.when(
-        F.col("mn_rn") <= F.col("mx_rn"),
-        F.struct(F.col("mn_rn").alias("rn"), F.col("mn.v").alias("v"), F.col("mn.x").alias("x")),
-    ).otherwise(
-        F.struct(F.col("mx_rn").alias("rn"), F.col("mx.v").alias("v"), F.col("mx.x").alias("x"))
-    )
-    hi = F.when(
-        F.col("mn_rn") <= F.col("mx_rn"),
-        F.struct(F.col("mx_rn").alias("rn"), F.col("mx.v").alias("v"), F.col("mx.x").alias("x")),
-    ).otherwise(
-        F.struct(F.col("mn_rn").alias("rn"), F.col("mn.v").alias("v"), F.col("mn.x").alias("x"))
-    )
-    slots = [lo, hi]
-    if k == 4:
-        first = F.struct(
-            F.col("fst.rn").alias("rn"), F.col("fst.v").alias("v"), F.col("fst.x").alias("x")
-        )
-        last = F.struct(
-            F.col("lst.rn").alias("rn"), F.col("lst.v").alias("v"), F.col("lst.x").alias("x")
-        )
-        slots = [first, lo, hi, last]
-    sel = (
-        binned.withColumn("_slots", F.array(*slots))
-        .select(*by, F.explode("_slots").alias("_s"))
+    out = (
+        pts.withColumn("_mult", F.expr(mult))
+        .filter(F.col("_mult") > 0)
         .select(
             *by,
-            F.col("_s.rn").cast("long").alias("sel_idx"),
-            F.col("_s.x").alias(x_col),
-            F.col("_s.v").alias(y_col),
+            F.col("rn").cast("long").alias("sel_idx"),
+            F.col(x_col),
+            F.col("v").alias(y_col),
+            F.explode(F.array_repeat(F.lit(0), F.col("_mult"))).alias("_r"),
         )
+        .drop("_r")
     )
-    out = sel.unionByName(passthrough).unionByName(small_series)
-    if collided is not None:
+    if detect:
         out = out.unionByName(
             _kernel_x_fallback(
-                collided, by, n_out, x_col, y_col, df.schema, x_is_int,
+                pts.filter((F.col("n") > n_out) & (F.col("_dvg") == 1))
+                .select(*by, "rn", "xv", x_col, "v"),
+                by, n_out, x_col, y_col, df.schema, x_is_int,
                 algo=("nan" if nan == "return" else "")
                 + ("minmax" if k == 2 else "m4"),
             )

@@ -8,6 +8,15 @@ both sides of the LSH self-join and its candidate pairs four times).
 ``materialize_shared`` runs the shared base ONCE per invocation and lets
 every consumer read the materialized blocks.
 
+Users: the long-form selectors ``minmax_long``, ``m4_long``,
+``minmaxlttb_long`` and ``minmaxlttb_x_long`` (operators/sql_selectors.py);
+``lsh_candidate_pairs``, ``jaccard_pairs`` and ``containment_pairs``
+(operators/dedup.py); ``tfidf_topk`` and ``pmi_collocations``
+(operators/frequency.py); ``inverted_index`` (operators/index.py);
+``session_association_rules`` (operators/assoc.py).  ``minmax_x_long`` /
+``m4_x_long`` do not use it: they are one window lineage whose collision
+fallback reuses the main branch's shuffle, so nothing is worth a persist.
+
 Mechanics and constraints:
 
 * ``persist()`` + eager ``count()`` rather than ``localCheckpoint``:
