@@ -96,8 +96,8 @@ def test_broadcast_join_for_small_probes(spark, sf_dir):
 def test_long_selector_shuffle_free_on_bucketed_source(spark, sf_dir, tmp_path):
     """The 100 TB claim, made checkable: when the source table is bucketed
     (and sorted) by the series key, the distributed long-form selector's
-    rank window and grouped aggregation need NO exchange at all — the whole
-    MinMax plan is scan -> window -> partial agg, shuffle-free."""
+    rank window and per-bin window need NO exchange at all — the whole
+    MinMax plan is scan -> windows -> explode, shuffle-free."""
     from tsdownsample_spark.operators.sql_selectors import minmax_long
 
     # (warehouse dir is a static conf; the default ./spark-warehouse is
@@ -124,34 +124,47 @@ def test_long_selector_shuffle_free_on_bucketed_source(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ev_bucketed_test")
 
 
-@pytest.mark.parametrize("fn_name", ["minmax_x_long", "m4_x_long"])
+@pytest.mark.parametrize(
+    "fn_name",
+    ["minmax_x_long", "m4_x_long", "minmax_long", "m4_long", "minmaxlttb_long",
+     "minmaxlttb_x_long"],
+)
 def test_x_long_one_window_lineage_no_cache(spark, sf_dir, fn_name):
-    """The with-x MinMax/M4 selectors run as one window lineage: no cached
-    base (no InMemoryRelation/InMemoryTableScan), ONE shuffle on the series
-    key, and the integer-x collision-fallback branch reads that shuffle as a
-    ReusedExchange instead of rescanning; nothing is left in the session's
-    CacheManager once the result is collected."""
+    """Every MinMax/M4/MinMaxLTTB long selector runs as one window lineage:
+    no cached base (no InMemoryRelation/InMemoryTableScan), ONE shuffle on
+    the series key, and nothing left in the session's CacheManager once the
+    result is collected.  Its only second consumers — the integer-x
+    collision fallback of the with-x MinMax/M4 and the MinMaxLTTB
+    small-series branch — read that shuffle as a ReusedExchange instead of
+    rescanning; the no-x MinMax/M4 have none and no Python step at all."""
     from tsdownsample_spark.operators import sql_selectors as S
 
     spark.catalog.clearCache()  # earlier tests' caches are not under test
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "value",
-        "event_id",
-    )
-    out = getattr(S, fn_name)(
-        ev, 40, x_col="ts_us", by=["event_type"], y_col="value",
-        tiebreak=["event_id"],
-    )
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    fn = getattr(S, fn_name)
+    if "_x_" in fn_name:
+        ev = ev.select(
+            "event_type",
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            "value",
+            "event_id",
+        )
+        out = fn(ev, 40, x_col="ts_us", by=["event_type"], y_col="value",
+                 tiebreak=["event_id"])
+    else:
+        out = fn(ev, 40, order=["ts", "event_id"], by=["event_type"],
+                 y_col="value")
     assert out.collect()
     final = _plan(out).split("== Initial Plan ==")[0]
     assert "InMemoryRelation" not in final, final
     assert "InMemoryTableScan" not in final, final
     nodes = [re.sub(r"^[\s:|+\-]*", "", line) for line in final.splitlines()]
     assert sum(n.startswith("Exchange ") for n in nodes) == 1, final
-    assert sum(n.startswith("ReusedExchange ") for n in nodes) == 1, final
-    assert "FlatMapGroupsInPandas" in final  # the fallback branch is planned
+    python_free = fn_name in ("minmax_long", "m4_long")
+    reused = sum(n.startswith("ReusedExchange ") for n in nodes)
+    assert reused == (0 if python_free else 1), final
+    # the fallback / LTTB tail is planned (and absent where there is none)
+    assert ("FlatMapGroupsInPandas" in final) != python_free, final
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

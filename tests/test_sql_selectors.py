@@ -3,6 +3,8 @@ as the vectorized kernels (which are themselves golden-tested against the
 reference) across series lengths that hit every branch: identity, small
 bins, plain-LTTB, and prefetch."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -33,6 +35,15 @@ def long_df(spark):
                     "seq": np.arange(n, dtype=np.int64),
                     "value": rng.normal(size=n).round(6),
                 }
+            )
+        )
+    # duplicate slots in every bin: constant y (argmin == argmax) and
+    # monotone y (M4's first is the min and its last the max)
+    for key, y in [("const", np.full(500, 0.5)),
+                   ("mono", np.sort(rng.normal(size=2003)).round(6))]:
+        frames.append(
+            pd.DataFrame(
+                {"series": key, "seq": np.arange(len(y), dtype=np.int64), "value": y}
             )
         )
     pdf = pd.concat(frames, ignore_index=True)
@@ -103,8 +114,9 @@ def test_trailing_point_drop_parity(spark):
 
 
 def test_minmax_long_bounded_plan(long_df):
-    """No collect_list / whole-series arrays anywhere in the plan; the
-    aggregation is partial (map-side combinable)."""
+    """No collect_list / whole-series arrays anywhere in the plan, and one
+    shuffle: the rank Exchange on the series key (the fixture's own
+    round-robin repartition aside)."""
     df, _ = long_df
     plan = (
         minmax_long(df, N_OUT, order=["seq"], by=["series"], y_col="value")
@@ -113,7 +125,12 @@ def test_minmax_long_bounded_plan(long_df):
         .toString()
     )
     assert "collect_list" not in plan
-    assert "partial_min" in plan or "partial" in plan
+    exchanges = [
+        line for line in plan.splitlines()
+        if re.sub(r"^[\s:|+\-]*", "", line).startswith("Exchange ")
+        and "RoundRobinPartitioning" not in line
+    ]
+    assert len(exchanges) == 1, plan
 
 
 @pytest.mark.parametrize("algo", ["minmax", "m4"])
@@ -169,6 +186,37 @@ def test_x_long_matches_kernel(spark, algo):
             fn(sdf, 40, x_col="x", by=["series"], y_col="value").collect()
         )
         assert got == sorted(exp)
+
+
+def test_x_long_timestamp_x_in_ntz_session(spark):
+    """Under spark.sql.timestampType=TIMESTAMP_NTZ a bare "timestamp" cast
+    means NTZ, which unix_micros rejects; timestamp x (LTZ and NTZ columns)
+    must still bin on its integer microseconds like the kernel's int64 view."""
+    from tsdownsample_spark.operators.sql_selectors import m4_x_long
+
+    rng = np.random.default_rng(47)
+    n = 997
+    x = 1_700_000_000_000_000 + np.cumsum(rng.integers(1, 20_000_000, size=n))
+    y = rng.normal(size=n).round(6)
+    df = spark.createDataFrame(
+        pd.DataFrame({"series": "ts", "x": x, "value": y})
+    ).repartition(4)
+    exp = sorted(int(i) for i in downsample_array(y, 40, algo="m4", x=x))
+    prev = spark.conf.get("spark.sql.timestampType", None)
+    spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        for ty in ("TIMESTAMP_LTZ", "TIMESTAMP_NTZ"):
+            sdf = df.withColumn("x", F.expr(f"CAST(timestamp_micros(x) AS {ty})"))
+            got = sorted(
+                r["sel_idx"] for r in
+                m4_x_long(sdf, 40, x_col="x", by=["series"], y_col="value").collect()
+            )
+            assert got == exp, ty
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.timestampType")
+        else:
+            spark.conf.set("spark.sql.timestampType", prev)
 
 
 @pytest.mark.parametrize("algo", ["minmax", "m4"])

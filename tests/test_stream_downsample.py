@@ -47,9 +47,25 @@ def _batch_expected(ev):
 
 
 @pytest.mark.slow
-def test_stream_minmax_matches_batch(spark, tmp_path, sf_dir):
+@pytest.mark.parametrize("ts_type", ["TIMESTAMP_LTZ", "TIMESTAMP_NTZ"])
+def test_stream_minmax_matches_batch(spark, tmp_path, sf_dir, ts_type):
+    """Run under both spark.sql.timestampType settings.  The event time
+    stays TIMESTAMP_LTZ (watermarks reject NTZ); under TIMESTAMP_NTZ a bare
+    "timestamp" cast inside the operator would turn it into NTZ."""
+    prev = spark.conf.get("spark.sql.timestampType", None)
+    spark.conf.set("spark.sql.timestampType", ts_type)
+    try:
+        _stream_vs_batch(spark, tmp_path, sf_dir)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.timestampType")
+        else:
+            spark.conf.set("spark.sql.timestampType", prev)
+
+
+def _stream_vs_batch(spark, tmp_path, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
+        "event_type", F.col("ts").cast("timestamp_ltz").alias("ts"), "value"
     )
     flat = str(tmp_path / "flat")
     os.makedirs(flat)

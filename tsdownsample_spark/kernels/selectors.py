@@ -236,13 +236,6 @@ def m4(
     return _ragged_emit(vs, ve, small, [vs, lo, hi, ve - 1])
 
 
-def _abs_bits(area: np.ndarray) -> np.ndarray:
-    """|area| compared through its IEEE-754 bit pattern, exactly like the
-    reference's sign-mask transmute trick (lttb.rs:6-11): monotone for
-    non-negative floats and total over NaN (NaN beats everything finite)."""
-    return np.abs(area).view(np.int64)
-
-
 def lttb(
     y: np.ndarray,
     n_out: int,

@@ -1,55 +1,49 @@
-"""Distributed long-form selectors — the 100 TB path for the "no x" mode.
+"""Distributed long-form selectors — the 100 TB path for long series.
 
 The kernel path (operators/downsample.py) is ideal when a series fits one
 row (token tables, plot-sized series).  For long-form points with very long
 or skewed series, materializing a whole series into one array row dies at
 Spark's 2 GiB column/Arrow limits.  These operators express the SAME selector
-semantics as compositions of windows + grouped aggregations, so per-task
-state is bounded by a *bin*, never a series:
+semantics as window compositions, so per-task state is bounded by a *bin*
+(or by a bounded candidate set), never a series:
 
-* ``minmax_long`` / ``m4_long`` — equal-count binning is computed per point
-  (closed-form bin index from the reference rule, minmax.rs:110-119), then
-  one groupBy (series, bin) computes first-occurrence argmin/argmax with
-  order-embedded struct aggregates.  Shuffle cost: the rank window + one
-  partial-aggregated groupBy; no point array ever materializes.
-* ``everynth_long`` — a pure projection after the rank window (zero extra
-  shuffle): a point knows from (rn, n) whether it is selected.
-* ``minmaxlttb_long`` — the prefetch (interior MinMax, n_out*ratio points)
-  runs distributed exactly as ``minmax_long``; only the BOUNDED candidate
-  set (n_out*ratio + 2 rows per series, independent of n) is grouped for the
-  sequential LTTB phase.  Series on the plain-LTTB branch are bounded too
-  (n <= (ratio+1) * n_out by the branch condition).  This is the selector
-  the reference cannot scale past one core per series; here a 10^9-point
-  series costs one bounded shuffle + a 402-row sequential tail.
+* MinMax / M4 (``minmax_long``, ``m4_long``, ``minmax_x_long``,
+  ``m4_x_long``) — every point computes its bin in closed form (equal-count:
+  _bin_expr, the reference rule minmax.rs:110-119; equidistant x:
+  _x_bin_expr), then ONE per-(series, bin) Window tells it the bin's count,
+  first/last index and first-occurrence argmin/argmax (_slot_lineage).  From
+  those a point knows which output positions it fills and is emitted once
+  per position, so the kernel's duplicate indices come out unchanged; no
+  bin or series is ever grouped.
+* ``everynth_long`` — a pure projection after the rank window: a point
+  knows from (rn, n) whether it is selected.
+* MinMaxLTTB (``minmaxlttb_long``, ``minmaxlttb_x_long``) — the interior
+  MinMax prefetch is the same slot lineage; only the BOUNDED candidate set
+  (n_out*ratio + 2 rows per prefetch series, independent of n; plain-branch
+  series have n <= (ratio+1)*n_out by the branch condition) is grouped per
+  series for the sequential LTTB tail.  This is the selector the reference
+  cannot scale past one core per series; here a 10^9-point series costs one
+  shuffle + a 402-row sequential tail.
 
 Selected-index parity with kernels.selectors is exact (same binning rule,
 same first-occurrence ties, same LTTB float op order — tested in
 tests/test_sql_selectors.py).
 
-Plan shape (audited via .explain): ``minmax_x_long`` / ``m4_x_long`` are ONE
-window lineage — rank window, one per-(series, bin) aggregate Window, the
-collision-flag window — ending in a per-point multiplicity explode; their
-only second consumer, the integer-x collision fallback, reads the same
-shuffle as a ReusedExchange (pinned:
-tests/test_plans.py::test_x_long_one_window_lineage_no_cache).  The other
-branching selectors (``minmax_long``, ``m4_long``, ``minmaxlttb_long``,
-``minmaxlttb_x_long``) emit plain UNIONs of identity/pass-through
-branches, and Catalyst does not share subtrees across union branches — left
-alone, each branch re-runs the scan + rank window (r6 audit:
-q_minmaxlttb_x_long = 6 parquet scans / 13 sorts) — so they
-``_materialize`` (``plans.materialize.materialize_shared``: persist + eager
-count) their ranked base once per invocation and every branch reads the
-cached blocks; ``everynth_long`` (single-consumer projection) does not.
-The rank exchange stays single either way, and it disappears when the
-source table is bucketed+sorted by the series key (the cached plan's scan
-preserves outputPartitioning/ordering; verified:
-tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source
+Plan shape (pinned: tests/test_plans.py::test_x_long_one_window_lineage_no_cache):
+every selector has ONE Exchange, the rank shuffle on the series key; the
+per-bin window, the collision flag and the LTTB tail's grouping all ride its
+hash(series) partitioning, and nothing is persisted.  The only second
+consumers — the MinMaxLTTB small-series branch (n <= n_out, emitted as is)
+and the with-x MinMax/M4 integer-x collision fallback — read that shuffle as
+a ReusedExchange: no second scan or shuffle, only the local sort and windows
+run again.  On a source bucketed and sorted by the series key the Exchange
+disappears (tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source
 shows a zero-Exchange plan with identical results).
 
-NaN policy: minmax_long/m4_long accept nan="return" (exact NaNMinMax/NaNM4
-semantics via a first-NaN-per-bin aggregate); the default expects NaN-free
-y.  nan="ignore" WITH NaNs present is kernel-path-only (struct max ordering
-treats NaN as greatest, which would corrupt the max slot).
+NaN policy: the MinMax/M4/MinMaxLTTB forms accept nan="return" (exact
+NaN* semantics via a first-NaN-per-bin aggregate); the default expects
+NaN-free y.  nan="ignore" WITH NaNs present is kernel-path-only (struct max
+ordering treats NaN as greatest, which would corrupt the max slot).
 
 Reference: predict-idlab/tsdownsample downsample_rs/src/minmax.rs:98-222,
 m4.rs:102-234, minmaxlttb.rs:125-207, tsdownsample/downsamplers.py:148-158.
@@ -64,7 +58,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from tsdownsample_spark.kernels.selectors import lttb
+from tsdownsample_spark.kernels.selectors import downsample_array, lttb
 
 __all__ = [
     "minmax_long",
@@ -78,12 +72,17 @@ __all__ = [
 
 
 def _x_numeric(df: DataFrame, x_col: str):
-    """Numeric (double) view of the x column for binning + the kernel's
-    integer-edge-truncation flag.  Timestamps bin on the INTEGER microsecond
-    view (the kernel's datetime64->int64 view, selectors.py:_as_float_view) —
-    CAST(ts AS DOUBLE) would be fractional seconds and truncate edges at
-    second granularity.  Dates are rejected (CAST(date AS DOUBLE) is not a
-    valid Spark cast); pre-convert with unix_date."""
+    """(num, x_is_int): the numeric (double) view of x values for binning
+    — a SQL template, applied to x_col and to its window aggregates (the
+    view is monotone, so it commutes with min/max/lag) — and the kernel's
+    integer-edge-truncation flag.  Timestamps bin on the INTEGER
+    microsecond view (the kernel's datetime64->int64 view,
+    selectors.py:_as_float_view) — CAST(ts AS DOUBLE) would be fractional
+    seconds and truncate edges at second granularity.  The cast is to
+    TIMESTAMP_LTZ explicitly: a plain "timestamp" cast means NTZ under
+    spark.sql.timestampType=TIMESTAMP_NTZ, which unix_micros rejects.  Dates
+    are rejected (CAST(date AS DOUBLE) is not a valid Spark cast);
+    pre-convert with unix_date."""
     x_dtype = df.schema[x_col].dataType.simpleString()
     if x_dtype == "date":
         raise ValueError(
@@ -92,16 +91,8 @@ def _x_numeric(df: DataFrame, x_col: str):
             "unix_date/unix_micros) like queries._x_long_query does"
         )
     if x_dtype.startswith("timestamp"):
-        return F.unix_micros(F.col(x_col).cast("timestamp")).cast("double"), True
-    return F.col(x_col).cast("double"), x_dtype in (
-        "bigint", "int", "smallint", "tinyint"
-    )
-
-
-# branch-shared base materialization (why and how: plans/materialize.py;
-# the bucketed zero-Exchange guarantee is pinned by
-# tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source)
-from tsdownsample_spark.plans.materialize import materialize_shared as _materialize  # noqa: E402
+        return "CAST(unix_micros(CAST({} AS TIMESTAMP_LTZ)) AS DOUBLE)", True
+    return "CAST({} AS DOUBLE)", x_dtype in ("bigint", "int", "smallint", "tinyint")
 
 
 def _ranked(
@@ -118,113 +109,163 @@ def _ranked(
     )
 
 
-def _bin_expr(m: int) -> str:
+def _x_ranked(
+    df: DataFrame, by: list, x_col: str, tiebreak: Sequence[str], y_col: str
+):
+    """(by..., x_col, rn, n, xv, prev_xv, x0, xn, v) in x order — one
+    shuffle — and whether x bins on integer (truncated) edges.  The windows
+    read x_col itself and the numeric view is taken after them, so the
+    shuffle carries only source columns: a second consumer that never reads
+    xv (the MinMaxLTTB small-series branch) plans the same exchange and
+    reuses it."""
+    num, x_is_int = _x_numeric(df, x_col)
+    x = F.col(x_col)
+    wo = Window.partitionBy(*by).orderBy(x_col, *tiebreak)
+    wp = Window.partitionBy(*by)
+    pts = df.select(
+        *by,
+        x,
+        (F.row_number().over(wo) - 1).alias("rn"),
+        F.count("*").over(wp).alias("n"),
+        F.lag(x).over(wo).alias("prev_x"),
+        F.min(x).over(wp).alias("min_x"),
+        F.max(x).over(wp).alias("max_x"),
+        F.col(y_col).cast("double").alias("v"),
+    )
+    x_sql = "`" + x_col.replace("`", "``") + "`"
+    return pts.select(
+        *by, x_col, "rn", "n",
+        *(F.expr(num.format(c)).alias(a) for c, a in [
+            (x_sql, "xv"), ("prev_x", "prev_xv"), ("min_x", "x0"), ("max_x", "xn"),
+        ]),
+        "v",
+    ), x_is_int
+
+
+def _bin_expr(m: int, rn: str = "rn", n: str = "n") -> str:
     """Closed-form equal-count bin index of a point (rn, n) for m bins.
 
     Forward rule (reference): bin i ends at hi(i) = floor(bs*(i+1)) + 1,
     bs = (n-1)/m in float64.  The inverse floor(rn/bs) can be off by one in
     either direction (float rounding), so the candidate is corrected against
     the forward rule — comparisons use exactly the kernel's hi() expression.
+    FP edge: floor(bs*m)+1 can land at n-1, in which case the kernel's bins
+    end BEFORE the last point and it is dropped (equal_count_bins tiles
+    [0, floor(bs*m)+1)); the inverse then yields m for that point, which
+    _slot_lineage drops, rather than inventing a bin m.
     """
-    bs = f"((n - 1) / CAST({m} AS DOUBLE))"
+    bs = f"(({n} - 1) / CAST({m} AS DOUBLE))"
     hi = "(CAST(FLOOR({bs} * ({i} + 1)) AS BIGINT) + 1)"
-    i0 = f"LEAST(CAST({m} AS BIGINT) - 1, CAST(FLOOR(rn / {bs}) AS BIGINT))"
+    i0 = f"LEAST(CAST({m} AS BIGINT) - 1, CAST(FLOOR({rn} / {bs}) AS BIGINT))"
     return (
-        f"CASE WHEN {i0} >= 1 AND rn < {hi.format(bs=bs, i=f'({i0} - 1)')} "
+        f"CASE WHEN {i0} >= 1 AND {rn} < {hi.format(bs=bs, i=f'({i0} - 1)')} "
         f"THEN {i0} - 1 "
-        f"WHEN rn >= {hi.format(bs=bs, i=i0)} THEN {i0} + 1 "
+        f"WHEN {rn} >= {hi.format(bs=bs, i=i0)} THEN {i0} + 1 "
         f"ELSE {i0} END"
     )
 
 
-def _binned_minmax(
-    pts: DataFrame, by: Sequence[str], m: int, rn_col: str = "rn",
+def _slot_lineage(
+    pts: DataFrame,
+    by: list,
+    m: int,
+    k: int,
+    keep: str,
     nan: str = "forbid",
+    small_bins: bool = False,
+    detect: bool = False,
+    x_is_int: bool = False,
 ) -> DataFrame:
-    """Per (series, bin): first-occurrence argmin/argmax of v, plus the bin's
-    first/last positions — grouped aggregation, map-side combinable.
+    """The per-point slot choice every MinMax/M4/MinMaxLTTB long selector
+    reads.  ``pts`` carries (by..., rn, v, bin), plus (xv, prev_xv) when
+    ``detect``; the result adds ``_pos``, the sorted list of output
+    positions the point fills (NULL for none) — callers explode it.
 
-    First occurrence is embedded in the aggregate ordering: min(struct(v, rn))
-    picks (min v, min rn); max(struct(v, -rn)) picks (max v, min rn).
+    ONE per-(series, bin) Window gives every point its bin's count,
+    first/last rn and first-occurrence argmin/argmax — min(struct(v, rn))
+    picks (min v, min rn), max(struct(v, -rn)) picks (max v, min rn).  Bin b
+    owns positions k*b .. k*b+k-1 for its slots in index order: first, lo,
+    hi, last for M4 (k=4); lo, hi for MinMax (k=2), lo/hi being argmin and
+    argmax sorted.  Slot rn never decrease, so a point filling several
+    slots (argmin == argmax, M4's first == min) fills a contiguous range,
+    and the list's length reproduces the kernel's duplicate indices.
 
-    ``nan="return"`` adds the NaN-return rule (NaN* selectors): a bin with
-    any NaN returns its FIRST NaN index for both slots — one extra
-    decomposable aggregate (min rn over NaN rows), no extra shuffle.
+    Rules, first match wins:
+
+    * ``keep`` (SQL predicate): one position, ``rn`` — a series with
+      n <= n_out, or a MinMaxLTTB row outside the prefetch bins;
+    * ``detect``: a series _collision_flag marks (column ``_dvg``) fills
+      nothing — its caller reroutes it whole to the kernel;
+    * ``bin >= m``: past the last edge, which the kernel drops;
+    * ``small_bins`` (with-x only, minmax.rs:199-203 / m4.rs:206-210): a bin
+      of <= k points passes each point through once;
+    * otherwise: one position per slot the point is.
+
+    ``nan="return"``: a bin with any NaN returns its FIRST NaN for both the
+    min and max slot (the NaN* selectors) — one more window aggregate.
     """
-    binned = (
-        pts.withColumn("bin", F.expr(_bin_expr(m)))
-        # FP edge: floor(bs*m)+1 can land at n-1, in which case the kernel's
-        # bins end BEFORE the last point and it is dropped (equal_count_bins
-        # tiles [0, floor(bs*m)+1)); the inverse assignment must drop it too,
-        # not invent a bin m.
-        .filter(F.col("bin") < m)
-        .groupBy(*by, "bin")
-        .agg(
-            F.min(F.struct(F.col("v"), F.col(rn_col).alias("rn"))).alias("mn"),
-            F.max(F.struct(F.col("v"), (-F.col(rn_col)).alias("nrn"))).alias("mx"),
-            F.min(F.struct(F.col(rn_col).alias("rn"), F.col("v"))).alias("fst"),
-            F.max(F.struct(F.col(rn_col).alias("rn"), F.col("v"))).alias("lst"),
-            F.min(F.when(F.isnan("v"), F.col(rn_col))).alias("nan_rn"),
-        )
-        .withColumn("mn_rn", F.col("mn.rn"))
-        .withColumn("mx_rn", -F.col("mx.nrn"))
-    )
+    wb = Window.partitionBy(*by, "bin")
+    mn_rn = F.min(F.struct("v", "rn")).over(wb)["rn"]
+    mx_rn = -F.max(F.struct(F.col("v"), (-F.col("rn")).alias("nrn"))).over(wb)["nrn"]
     if nan == "return":
-        nan_v = F.expr("CAST('NaN' AS DOUBLE)")
-        has = F.col("nan_rn").isNotNull()
-        binned = (
-            binned.withColumn("mn_rn", F.when(has, F.col("nan_rn")).otherwise(F.col("mn_rn")))
-            .withColumn("mx_rn", F.when(has, F.col("nan_rn")).otherwise(F.col("mx_rn")))
-            .withColumn(
-                "mn",
-                F.when(has, F.struct(nan_v.alias("v"), F.col("nan_rn").alias("rn"))).otherwise(F.col("mn")),
-            )
-            .withColumn(
-                "mx",
-                F.when(
-                    has,
-                    F.struct(nan_v.alias("v"), (-F.col("nan_rn")).alias("nrn")),
-                ).otherwise(F.col("mx")),
-            )
-        )
-    return binned
-
-
-def _emit(binned: DataFrame, by: Sequence[str], slots: list, k: int) -> DataFrame:
-    """Explode per-bin slot structs into (by..., pos, sel_idx, sel_value)."""
-    arr = F.array(*slots)
-    return (
-        binned.withColumn("_slots", arr)
-        .select(*by, "bin", F.posexplode("_slots").alias("_o", "_s"))
-        .select(
-            *by,
-            (F.lit(k) * F.col("bin") + F.col("_o")).cast("long").alias("pos"),
-            F.col("_s.rn").cast("long").alias("sel_idx"),
-            F.col("_s.v").alias("sel_value"),
-        )
+        nan_rn = F.min(F.when(F.isnan("v"), F.col("rn"))).over(wb)
+        mn_rn, mx_rn = F.coalesce(nan_rn, mn_rn), F.coalesce(nan_rn, mx_rn)
+    # every per-(series, bin) aggregate in one select -> one Window operator
+    # (Catalyst prunes the ones a caller never reads)
+    pts = pts.select(
+        "*",
+        F.count("*").over(wb).alias("cnt"),
+        F.min("rn").over(wb).alias("bin_min_rn"),
+        F.max("rn").over(wb).alias("bin_max_rn"),
+        mn_rn.alias("mn_rn"),
+        mx_rn.alias("mx_rn"),
     )
-
-
-def _identity_small(pts: DataFrame, by: Sequence[str], n_out: int) -> DataFrame:
-    return pts.filter(F.col("n") <= n_out).select(
-        *by,
-        F.col("rn").cast("long").alias("pos"),
-        F.col("rn").cast("long").alias("sel_idx"),
-        F.col("v").alias("sel_value"),
+    if detect:
+        # normally ZERO series are flagged; the flag window rides the
+        # existing hash(by) distribution, no extra exchange
+        flag = f"COALESCE(CAST(({_collision_flag(m, x_is_int)}) AS INT), 0)"
+        pts = pts.withColumn(
+            "_dvg", F.max(F.expr(flag)).over(Window.partitionBy(*by))
+        )
+    lo, hi = "LEAST(mn_rn, mx_rn)", "GREATEST(mn_rn, mx_rn)"
+    slots = [lo, hi] if k == 2 else ["bin_min_rn", lo, hi, "bin_max_rn"]
+    # index of the first / last slot the point is
+    first, last = (
+        "CASE " + " ".join(f"WHEN rn = {slots[j]} THEN {j}" for j in js) + " END"
+        for js in (range(k), reversed(range(k)))
     )
+    pos = (
+        "CASE WHEN " + keep + " THEN array(CAST(rn AS BIGINT)) "
+        + ("WHEN _dvg = 1 THEN NULL " if detect else "")
+        + f"WHEN bin >= {m} THEN NULL "
+        + (f"WHEN cnt <= {k} THEN array({k} * bin + rn - bin_min_rn) " if small_bins else "")
+        + f"WHEN rn IN ({', '.join(slots)}) "
+        + f"THEN sequence({k} * bin + {first}, {k} * bin + {last}) END"
+    )
+    return pts.withColumn("_pos", F.expr(pos))
 
 
-def _minmax_slots():
-    """(lo, hi) slot structs in index order, values carried from the agg."""
-    lo = F.when(
-        F.col("mn_rn") <= F.col("mx_rn"),
-        F.struct(F.col("mn_rn").alias("rn"), F.col("mn.v").alias("v")),
-    ).otherwise(F.struct(F.col("mx_rn").alias("rn"), F.col("mx.v").alias("v")))
-    hi = F.when(
-        F.col("mn_rn") <= F.col("mx_rn"),
-        F.struct(F.col("mx_rn").alias("rn"), F.col("mx.v").alias("v")),
-    ).otherwise(F.struct(F.col("mn_rn").alias("rn"), F.col("mn.v").alias("v")))
-    return lo, hi
+def _downsample_long(
+    df: DataFrame,
+    n_out: int,
+    k: int,
+    order: Sequence[str],
+    by: Sequence[str],
+    y_col: str,
+    nan: str,
+) -> DataFrame:
+    """Shared body for minmax_long (k=2) / m4_long (k=4): equal-count bins,
+    one slot lineage, one explode — (by..., pos, sel_idx, sel_value).
+    Equal-count bins are never empty, so k*bin + slot is the kernel's
+    output position."""
+    by = list(by)
+    m = n_out // k
+    pts = _ranked(df, by, order, y_col).withColumn("bin", F.expr(_bin_expr(m)))
+    pts = _slot_lineage(pts, by, m, k, f"n <= {n_out}", nan=nan)
+    return pts.select(
+        *by, F.explode("_pos").alias("pos"),
+        F.col("rn").cast("long").alias("sel_idx"), F.col("v").alias("sel_value"),
+    )
 
 
 def minmax_long(
@@ -241,12 +282,7 @@ def minmax_long(
     both slots); the default expects NaN-free y (see module docstring)."""
     if n_out % 2:
         raise ValueError("n_out must be a multiple of 2")
-    by = list(by)
-    pts = _materialize(_ranked(df, by, order, y_col))
-    big = pts.filter(F.col("n") > n_out)
-    lo, hi = _minmax_slots()
-    sel = _emit(_binned_minmax(big, by, n_out // 2, nan=nan), by, [lo, hi], 2)
-    return sel.unionByName(_identity_small(pts, by, n_out))
+    return _downsample_long(df, n_out, 2, order, by, y_col, nan)
 
 
 def m4_long(
@@ -262,14 +298,7 @@ def m4_long(
     ``nan="return"`` gives NaNM4 (first/last slots stay positional)."""
     if n_out % 4:
         raise ValueError("n_out must be a multiple of 4")
-    by = list(by)
-    pts = _materialize(_ranked(df, by, order, y_col))
-    big = pts.filter(F.col("n") > n_out)
-    lo, hi = _minmax_slots()
-    first = F.struct(F.col("fst.rn").alias("rn"), F.col("fst.v").alias("v"))
-    last = F.struct(F.col("lst.rn").alias("rn"), F.col("lst.v").alias("v"))
-    sel = _emit(_binned_minmax(big, by, n_out // 4, nan=nan), by, [first, lo, hi, last], 4)
-    return sel.unionByName(_identity_small(pts, by, n_out))
+    return _downsample_long(df, n_out, 4, order, by, y_col, nan)
 
 
 def everynth_long(
@@ -369,7 +398,7 @@ def _x_bin_expr(m: int, x_is_int: bool) -> str:
     )
 
 
-def _collision_flag(m: int, x_is_int: bool):
+def _collision_flag(m: int, x_is_int: bool) -> str:
     """Per-point detector for the two closed-form-vs-sequential divergence
     sources (searchsorted.rs:112-127), evaluated on a frame carrying
     (bin, xv, prev_xv, rn, bin_min_rn):
@@ -382,12 +411,69 @@ def _collision_flag(m: int, x_is_int: bool):
       lag over the rank order sees them).
 
     max() of this over the series window = route the series to the kernel.
+    One SQL predicate: Column-API composition costs a py4j round trip per
+    node at build time.
     """
     edge_at_bin = _x_edge_tmpl(m, x_is_int).format(i="bin")
-    is_eq = (F.col("bin") < m) & (F.col("xv") == F.expr(edge_at_bin))
-    return is_eq & (
-        (F.col("rn") == F.col("bin_min_rn")) | (F.col("prev_xv") == F.col("xv"))
+    return (
+        f"bin < {m} AND xv = {edge_at_bin} "
+        "AND (rn = bin_min_rn OR prev_xv = xv)"
     )
+
+
+def _per_series(
+    rows: DataFrame,
+    by: list,
+    n_out: int,
+    algo: str,
+    src_schema,
+    x: tuple | None = None,
+    **kw,
+) -> DataFrame:
+    """Per-series Python step over ``rows`` (by..., rn, v, _whole[, xv,
+    x_col]) via applyInPandas.  A series whose rows are ALL of it
+    (``_whole``: a MinMaxLTTB plain-branch series, or an edge-collision
+    series) runs the exact NumPy kernel ``algo``; a MinMaxLTTB prefetch
+    series (endpoints + candidates) runs the LTTB tail over its candidates
+    with their original index (no-x) or x value as x (minmaxlttb.rs:136-156).
+
+    ``x`` = (x_col, y_col, x_is_int) gives the with-x output (by...,
+    sel_idx, x_col, y_col); None the no-x one (by..., pos, sel_idx,
+    sel_value)."""
+    key_fields = ", ".join(f"{c} {src_schema[c].dataType.simpleString()}" for c in by)
+    if x is None:
+        schema = f"{key_fields}, pos long, sel_idx long, sel_value double"
+        keys, val = by, "sel_value"
+    else:
+        x_col, val, x_is_int = x
+        x_dtype = src_schema[x_col].dataType.simpleString()
+        schema = f"{key_fields}, sel_idx long, {x_col} {x_dtype}, {val} double"
+        keys = by + [x_col]
+
+    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("rn", kind="mergesort", ignore_index=True)
+        y = pdf["v"].to_numpy()
+        rn = pdf["rn"].to_numpy()
+        if bool(pdf["_whole"].iloc[0]):
+            xk = None
+            if x is not None:
+                xk = pdf["xv"].to_numpy()
+                xk = xk.astype(np.int64) if x_is_int else xk
+            idx = downsample_array(y, n_out, algo=algo, x=xk, **kw)
+        else:
+            xc = rn.astype(np.float64) if x is None else pdf["xv"].to_numpy()
+            idx = lttb(y, n_out, x=xc)
+        out = pdf.iloc[idx][keys].copy()
+        out.insert(len(by), "sel_idx", rn[idx])
+        if x is None:
+            out.insert(len(by), "pos", np.arange(len(idx), dtype=np.int64))
+        # masked FloatingArray keeps NaN selections as VALUES through Arrow
+        out[val] = pd.arrays.FloatingArray(
+            y[idx].copy(), np.zeros(len(idx), dtype=bool)
+        )
+        return out
+
+    return rows.groupBy(*by).applyInPandas(_fn, schema)
 
 
 def _downsample_x_long(
@@ -402,15 +488,9 @@ def _downsample_x_long(
     collision_policy: str = "auto",
 ) -> DataFrame:
     """Shared body for minmax_x_long (k=2) / m4_x_long (k=4): equidistant
-    x-value bins computed per point, per-(series, bin) window aggregates;
-    bins with <= k points pass all points through; empty bins emit nothing.
-    Output matches the kernel queries: (by..., sel_idx, x_col, y_col).
-
-    One window lineage, no union of rescans: every point learns its bin's
-    count, first/last rn and first-occurrence argmin/argmax from ONE Window
-    operator, then is emitted as many times as the slots it fills (first,
-    lo, hi, last for M4; lo, hi for MinMax — a point filling two slots is
-    emitted twice, exactly like the kernel's duplicate indices).
+    x-value bins computed per point, one slot lineage; bins with <= k points
+    pass all points through; empty bins emit nothing.  Output matches the
+    kernel queries: (by..., sel_idx, x_col, y_col).
 
     ``collision_policy`` controls edge-collision handling (see
     _collision_flag): "auto" (default) detects and kernel-reroutes collided
@@ -424,134 +504,34 @@ def _downsample_x_long(
 
     ``nan="return"`` gives the NaN* with-x semantics (reference instantiates
     NaN with-x kernels at minmax.rs:72-74 / m4.rs:70-72): a bin with any NaN
-    returns its FIRST NaN for both the min and max slot — one more
-    min-rn-over-NaN window aggregate.  Passthrough bins (<= k points) emit
-    all points regardless of NaN, exactly like the kernel's small-bin rule.
+    returns its FIRST NaN for both the min and max slot.  Passthrough bins
+    (<= k points) emit all points regardless of NaN, exactly like the
+    kernel's small-bin rule.
     """
     by = list(by)
     m = n_out // k
-    order = [x_col, *tiebreak]
-    wo = Window.partitionBy(*by).orderBy(*order)
-    wp = Window.partitionBy(*by)
-    wb = Window.partitionBy(*by, "bin")
-    x_num, x_is_int = _x_numeric(df, x_col)
-    pts = df.select(
-        *by,
-        F.col(x_col),
-        (F.row_number().over(wo) - 1).alias("rn"),
-        F.count("*").over(wp).alias("n"),
-        x_num.alias("xv"),
-        F.lag(x_num).over(wo).alias("prev_xv"),
-        F.min(x_num).over(wp).alias("x0"),
-        F.max(x_num).over(wp).alias("xn"),
-        F.col(y_col).cast("double").alias("v"),
-    ).withColumn("bin", F.expr(_x_bin_expr(m, x_is_int)))
-    # every per-(series, bin) aggregate in one select -> one Window operator.
-    # First occurrence is embedded in the ordering: min(struct(v, rn)) picks
-    # (min v, min rn); max(struct(v, -rn)) picks (max v, min rn).
-    mn_rn = F.min(F.struct("v", "rn")).over(wb)["rn"]
-    mx_rn = -F.max(F.struct(F.col("v"), (-F.col("rn")).alias("nrn"))).over(wb)["nrn"]
-    if nan == "return":
-        nan_rn = F.min(F.when(F.isnan("v"), F.col("rn"))).over(wb)
-        mn_rn, mx_rn = F.coalesce(nan_rn, mn_rn), F.coalesce(nan_rn, mx_rn)
-    pts = pts.select(
-        "*",
-        F.count("*").over(wb).alias("cnt"),
-        F.min("rn").over(wb).alias("bin_min_rn"),
-        F.max("rn").over(wb).alias("bin_max_rn"),
-        mn_rn.alias("mn_rn"),
-        mx_rn.alias("mx_rn"),
-    )
-    # Edge-collision detection: series where the closed form would diverge
-    # from the reference's sequential push are routed whole to the kernel
-    # (normally ZERO series — the flag window rides the existing hash(by)
-    # distribution, no extra exchange).
+    pts, x_is_int = _x_ranked(df, by, x_col, tiebreak, y_col)
     detect = collision_policy == "exact" or (
         collision_policy == "auto" and x_is_int
     )
-    if detect:
-        pts = pts.withColumn(
-            "_dvg",
-            F.max(
-                F.coalesce(_collision_flag(m, x_is_int).cast("int"), F.lit(0))
-            ).over(wp),
-        )
-    slots = ["mn_rn", "mx_rn"] if k == 2 else ["bin_min_rn", "mn_rn", "mx_rn", "bin_max_rn"]
-    # how many output slots a point fills.  bin == m means strictly past the
-    # truncated last edge -> the reference drops the point (trailing-drop);
-    # edge-EQUAL points already landed in bin m-1 via the <=-rule in
-    # _x_bin_expr.
-    mult = (
-        f"CASE WHEN n <= {n_out} THEN 1 "
-        + ("WHEN _dvg = 1 THEN 0 " if detect else "")
-        + f"WHEN bin >= {m} THEN 0 WHEN cnt <= {k} THEN 1 ELSE "
-        + " + ".join(f"CAST(rn = {s} AS INT)" for s in slots)
-        + " END"
+    pts = _slot_lineage(
+        pts.withColumn("bin", F.expr(_x_bin_expr(m, x_is_int))), by, m, k,
+        f"n <= {n_out}", nan=nan, small_bins=True, detect=detect,
+        x_is_int=x_is_int,
     )
-    out = (
-        pts.withColumn("_mult", F.expr(mult))
-        .filter(F.col("_mult") > 0)
-        .select(
-            *by,
-            F.col("rn").cast("long").alias("sel_idx"),
-            F.col(x_col),
-            F.col("v").alias(y_col),
-            F.explode(F.array_repeat(F.lit(0), F.col("_mult"))).alias("_r"),
-        )
-        .drop("_r")
-    )
+    out = pts.select(
+        *by, F.col("rn").cast("long").alias("sel_idx"), F.col(x_col),
+        F.col("v").alias(y_col), F.explode("_pos").alias("pos"),
+    ).drop("pos")
     if detect:
+        collided = pts.filter((F.col("n") > n_out) & (F.col("_dvg") == 1)).select(
+            *by, "rn", "v", F.lit(True).alias("_whole"), "xv", x_col
+        )
+        algo = ("nan" if nan == "return" else "") + ("minmax" if k == 2 else "m4")
         out = out.unionByName(
-            _kernel_x_fallback(
-                pts.filter((F.col("n") > n_out) & (F.col("_dvg") == 1))
-                .select(*by, "rn", "xv", x_col, "v"),
-                by, n_out, x_col, y_col, df.schema, x_is_int,
-                algo=("nan" if nan == "return" else "")
-                + ("minmax" if k == 2 else "m4"),
-            )
+            _per_series(collided, by, n_out, algo, df.schema, x=(x_col, y_col, x_is_int))
         )
     return out
-
-
-def _kernel_x_fallback(
-    collided: DataFrame,
-    by: list,
-    n_out: int,
-    x_col: str,
-    y_col: str,
-    src_schema,
-    x_is_int: bool,
-    algo: str,
-    kw: dict | None = None,
-) -> DataFrame:
-    """Whole-series kernel path for edge-collision series (normally empty):
-    the sequential empty-bin push is order-dependent, so these run through
-    the exact NumPy kernel via applyInPandas.  Input frame must carry
-    (by..., rn, xv, x_col, v)."""
-    from tsdownsample_spark.kernels.selectors import downsample_array
-
-    kw = kw or {}
-    key_fields = ", ".join(
-        f"{c} {src_schema[c].dataType.simpleString()}" for c in by
-    )
-    x_dtype = src_schema[x_col].dataType.simpleString()
-    schema = f"{key_fields}, sel_idx long, {x_col} {x_dtype}, {y_col} double"
-
-    def _fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn", kind="mergesort", ignore_index=True)
-        y = pdf["v"].to_numpy()
-        xarr = pdf["xv"].to_numpy()
-        if x_is_int:
-            xarr = xarr.astype(np.int64)
-        idx = downsample_array(y, n_out, algo=algo, x=xarr, **kw)
-        out = pdf.iloc[idx][list(by) + [x_col]].copy()
-        out.insert(len(by), "sel_idx", pdf["rn"].to_numpy()[idx])
-        out[y_col] = pd.arrays.FloatingArray(
-            y[idx].copy(), np.zeros(len(idx), dtype=bool)
-        )
-        return out
-
-    return collided.groupBy(*by).applyInPandas(_fn, schema)
 
 
 def minmax_x_long(
@@ -596,6 +576,14 @@ def m4_x_long(
     )
 
 
+def _plain_interior(n_out: int, ratio: int):
+    """(plain, interior): a series takes the plain-LTTB branch on the
+    kernel's integer-division rule n // n_out <= ratio; otherwise its
+    interior [1, n-1) is MinMax-prefetched."""
+    plain = (F.col("n") / n_out).cast("long") <= ratio
+    return plain, ~plain & (F.col("rn") >= 1) & (F.col("rn") < F.col("n") - 1)
+
+
 def minmaxlttb_long(
     df: DataFrame,
     n_out: int,
@@ -607,11 +595,14 @@ def minmaxlttb_long(
 ) -> DataFrame:
     """Distributed MinMaxLTTB: unbounded series, bounded per-task state.
 
-    Prefetch (interior MinMax over [1, n-1), n_out*ratio candidates) runs as
-    a grouped aggregation like ``minmax_long``; only the candidate set —
-    n_out*ratio + 2 rows per series, INDEPENDENT of series length — is
-    gathered per series for the sequential LTTB tail.  Plain-branch series
-    (n // n_out <= ratio) are themselves bounded by (ratio+1)*n_out rows.
+    The prefetch (interior MinMax over [1, n-1), n_out*ratio candidates) is
+    the slot lineage of ``minmax_long`` over the interior re-based to
+    (rn-1, n-2); one explode of its position lists then keeps every point
+    of a plain-branch series (n // n_out <= ratio — itself bounded by
+    (ratio+1)*n_out rows), the endpoints of each prefetch series, and its
+    interior candidates with their slot multiplicity.  Only that set —
+    n_out*ratio + 2 rows per prefetch series, INDEPENDENT of series length —
+    is gathered per series for the sequential LTTB tail.
 
     ``nan="return"`` gives NaNMinMaxLTTB: the prefetch uses the NaN-return
     MinMax (first NaN per bin wins both slots); the LTTB tail needs no flag
@@ -621,57 +612,26 @@ def minmaxlttb_long(
     if ratio <= 1:
         raise ValueError("minmax_ratio must be > 1")
     by = list(by)
-    pts = _materialize(_ranked(df, by, order, y_col))
-
-    # branch split on the kernel's integer-division rule
-    big = pts.filter(F.col("n") > n_out)
-    plain = big.filter((F.col("n") / n_out).cast("long") <= ratio)
-    pre = big.filter((F.col("n") / n_out).cast("long") > ratio)
-
-    # --- prefetch branch: interior equal-count MinMax, fully distributed
-    interior = (
-        pre.filter((F.col("rn") >= 1) & (F.col("rn") < F.col("n") - 1))
-        .withColumn("rn", F.col("rn") - 1)
-        .withColumn("n", F.col("n") - 2)
-    )
     m = n_out * ratio // 2
-    binned = _binned_minmax(interior, by, m, nan=nan)
-    lo, hi = _minmax_slots()
-    cand_inner = _emit(binned, by, [lo, hi], 2).select(
-        *by, (F.col("sel_idx") + 1).alias("rn"), F.col("sel_value").alias("v")
+    pts = _ranked(df, by, order, y_col)
+    plain, interior = _plain_interior(n_out, ratio)
+    big = pts.filter(F.col("n") > n_out).withColumn(
+        "bin", F.when(interior, F.expr(_bin_expr(m, rn="(rn - 1)", n="(n - 2)")))
     )
-    endpoints = (
-        pre.filter((F.col("rn") == 0) | (F.col("rn") == F.col("n") - 1))
-        .select(*by, "rn", "v")
+    cands = _slot_lineage(big, by, m, 2, "bin IS NULL", nan=nan).select(
+        *by, "rn", "v", plain.alias("_whole"), F.explode("_pos").alias("pos")
+    ).drop("pos")
+    small = pts.filter(F.col("n") <= n_out).select(
+        *by,
+        F.col("rn").cast("long").alias("pos"),
+        F.col("rn").cast("long").alias("sel_idx"),
+        F.col("v").alias("sel_value"),
     )
-    cands = cand_inner.unionByName(endpoints).withColumn("plain", F.lit(False))
-    plain_pts = plain.select(*by, "rn", "v").withColumn("plain", F.lit(True))
-    grouped = cands.unionByName(plain_pts)
-
-    key_fields = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in by
+    sel = _per_series(
+        cands, by, n_out, ("nan" if nan == "return" else "") + "minmaxlttb",
+        df.schema, minmax_ratio=ratio,
     )
-    schema = f"{key_fields}, pos long, sel_idx long, sel_value double"
-
-    def _tail(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn", kind="mergesort", ignore_index=True)
-        y = pdf["v"].to_numpy()
-        rn = pdf["rn"].to_numpy()
-        if bool(pdf["plain"].iloc[0]):
-            sel = lttb(y, n_out)  # no-x mode (kernel FP op order)
-        else:
-            sel = lttb(y, n_out, x=rn.astype(np.float64))
-        out = pdf.iloc[sel][list(by)].copy()
-        out["pos"] = np.arange(len(sel), dtype=np.int64)
-        out["sel_idx"] = rn[sel]
-        # masked FloatingArray keeps NaN selections as VALUES through Arrow
-        out["sel_value"] = pd.arrays.FloatingArray(
-            y[sel].copy(), np.zeros(len(sel), dtype=bool)
-        )
-        return out
-
-    sel = grouped.groupBy(*by).applyInPandas(_tail, schema)
-    return sel.unionByName(_identity_small(pts, by, n_out))
+    return sel.unionByName(small)
 
 
 def minmaxlttb_x_long(
@@ -695,7 +655,9 @@ def minmaxlttb_x_long(
     of length (empty equidistant bins only shrink that); plain-branch series
     are bounded by ``(ratio+1)*n_out`` rows.  Both branches run the SAME
     with-x LTTB call (unlike the no-x twin, where the plain branch uses
-    index-x) — the kernel does too (minmaxlttb.rs:158-171).
+    index-x) — the kernel does too (minmaxlttb.rs:158-171).  Edge-collision
+    series (see ``_downsample_x_long``'s ``collision_policy``) reach the tail
+    whole and run the kernel MinMaxLTTB there.
 
     Output matches the other with-x operators: (by..., sel_idx, x_col, y_col).
     """
@@ -703,146 +665,37 @@ def minmaxlttb_x_long(
         raise ValueError("minmax_ratio must be > 1")
     by = list(by)
     m = n_out * ratio // 2
-    order = [x_col, *tiebreak]
-    wo = Window.partitionBy(*by).orderBy(*order)
-    wp = Window.partitionBy(*by)
-    x_num, x_is_int = _x_numeric(df, x_col)
-    pts = df.select(
-        *by,
-        F.col(x_col),
-        (F.row_number().over(wo) - 1).alias("rn"),
-        F.count("*").over(wp).alias("n"),
-        x_num.alias("xv"),
-        F.lag(x_num).over(wo).alias("prev_xv"),
-        F.col(y_col).cast("double").alias("v"),
-    )
-    pts = _materialize(pts)
-    small_series = pts.filter(F.col("n") <= n_out).select(
-        *by, F.col("rn").cast("long").alias("sel_idx"),
-        F.col(x_col), F.col("v").alias(y_col),
-    )
-    big = pts.filter(F.col("n") > n_out)
-    plain = big.filter((F.col("n") / n_out).cast("long") <= ratio)
-    pre = big.filter((F.col("n") / n_out).cast("long") > ratio)
-
-    # --- prefetch: interior equidistant MinMax (kernel: minmax(y[1:n-1],
-    # n_out*ratio, x=x[1:n-1])) — bin edges span the INTERIOR x range.
-    # Edge-collision series (closed-form bin vs sequential push divergence)
-    # are detected exactly like _downsample_x_long and rerouted whole to the
-    # kernel MinMaxLTTB (normally zero series, no extra exchange).
-    is_int = (F.col("rn") >= 1) & (F.col("rn") < F.col("n") - 1)
-    pre2 = (
-        pre.withColumn("x0", F.min(F.when(is_int, F.col("xv"))).over(wp))
-        .withColumn("xn", F.max(F.when(is_int, F.col("xv"))).over(wp))
-        .withColumn("bin", F.when(is_int, F.expr(_x_bin_expr(m, x_is_int))))
-    )
-    wb = Window.partitionBy(*by, "bin")
+    pts, x_is_int = _x_ranked(df, by, x_col, tiebreak, y_col)
     detect = collision_policy == "exact" or (
         collision_policy == "auto" and x_is_int
     )
-    collided = None
-    if detect:
-        pre2 = pre2.withColumn("bin_min_rn", F.min("rn").over(wb)).withColumn(
-            "_dvg",
-            F.max(
-                F.coalesce(_collision_flag(m, x_is_int).cast("int"), F.lit(0))
-            ).over(wp),
-        )
-        collided = pre2.filter(F.col("_dvg") == 1)
-        pre2 = pre2.filter(F.col("_dvg") == 0)
-    pre_clean = pre2
-    interior = pre_clean.filter(is_int & (F.col("bin") < m)).withColumn(
-        "cnt", F.count("*").over(wb)
+    # prefetch: interior equidistant MinMax (kernel: minmax(y[1:n-1],
+    # n_out*ratio, x=x[1:n-1])) — bin edges span the INTERIOR x range
+    wp = Window.partitionBy(*by)
+    plain, interior = _plain_interior(n_out, ratio)
+    big = (
+        pts.filter(F.col("n") > n_out)
+        .withColumns({
+            "x0": F.min(F.when(interior, F.col("xv"))).over(wp),
+            "xn": F.max(F.when(interior, F.col("xv"))).over(wp),
+        })
+        .withColumn("bin", F.when(interior, F.expr(_x_bin_expr(m, x_is_int))))
     )
-    passthrough = interior.filter(F.col("cnt") <= 2).select(*by, "rn", "xv", F.col(x_col), "v")
-    binned = (
-        interior.filter(F.col("cnt") > 2)
-        .groupBy(*by, "bin")
-        .agg(
-            F.min(
-                F.struct(F.col("v"), F.col("rn"), F.col("xv"), F.col(x_col).alias("x"))
-            ).alias("mn"),
-            F.max(
-                F.struct(
-                    F.col("v"), (-F.col("rn")).alias("nrn"), F.col("xv"),
-                    F.col(x_col).alias("x"),
-                )
-            ).alias("mx"),
-            F.min(
-                F.when(
-                    F.isnan("v"),
-                    F.struct(F.col("rn"), F.col("xv"), F.col(x_col).alias("x")),
-                )
-            ).alias("nanfst"),
-        )
+    big = _slot_lineage(
+        big, by, m, 2, "bin IS NULL OR _dvg = 1" if detect else "bin IS NULL",
+        nan=nan, small_bins=True, detect=detect, x_is_int=x_is_int,
     )
-    if nan == "return":
-        nan_v = F.expr("CAST('NaN' AS DOUBLE)")
-        has = F.col("nanfst").isNotNull()
-        binned = binned.withColumn(
-            "mn",
-            F.when(
-                has,
-                F.struct(
-                    nan_v.alias("v"), F.col("nanfst.rn").alias("rn"),
-                    F.col("nanfst.xv").alias("xv"), F.col("nanfst.x").alias("x"),
-                ),
-            ).otherwise(F.col("mn")),
-        ).withColumn(
-            "mx",
-            F.when(
-                has,
-                F.struct(
-                    nan_v.alias("v"), (-F.col("nanfst.rn")).alias("nrn"),
-                    F.col("nanfst.xv").alias("xv"), F.col("nanfst.x").alias("x"),
-                ),
-            ).otherwise(F.col("mx")),
-        )
-    cand_inner = binned.select(
-        *by,
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("mn.rn").alias("rn"), F.col("mn.xv").alias("xv"),
-                    F.col("mn.x").alias("x"), F.col("mn.v").alias("v"),
-                ),
-                F.struct(
-                    (-F.col("mx.nrn")).alias("rn"), F.col("mx.xv").alias("xv"),
-                    F.col("mx.x").alias("x"), F.col("mx.v").alias("v"),
-                ),
-            )
-        ).alias("_s"),
-    ).select(*by, "_s.rn", "_s.xv", F.col("_s.x").alias(x_col), "_s.v")
-    endpoints = pre_clean.filter(
-        (F.col("rn") == 0) | (F.col("rn") == F.col("n") - 1)
-    ).select(*by, "rn", "xv", F.col(x_col), "v")
-    plain_pts = plain.select(*by, "rn", "xv", F.col(x_col), "v")
-    grouped = cand_inner.unionByName(passthrough).unionByName(endpoints).unionByName(plain_pts)
-
-    key_fields = ", ".join(f"{c} {df.schema[c].dataType.simpleString()}" for c in by)
-    x_dtype = df.schema[x_col].dataType.simpleString()
-    schema = f"{key_fields}, sel_idx long, {x_col} {x_dtype}, {y_col} double"
-
-    def _tail(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn", kind="mergesort", ignore_index=True)
-        y = pdf["v"].to_numpy()
-        xf = pdf["xv"].to_numpy()
-        sel = lttb(y, n_out, x=xf)
-        out = pdf.iloc[sel][list(by) + [x_col]].copy()
-        out.insert(len(by), "sel_idx", pdf["rn"].to_numpy()[sel])
-        out[y_col] = pd.arrays.FloatingArray(
-            y[sel].copy(), np.zeros(len(sel), dtype=bool)
-        )
-        return out
-
-    sel = grouped.groupBy(*by).applyInPandas(_tail, schema)
-    out = sel.unionByName(small_series)
-    if collided is not None:
-        out = out.unionByName(
-            _kernel_x_fallback(
-                collided, by, n_out, x_col, y_col, df.schema, x_is_int,
-                algo=("nan" if nan == "return" else "") + "minmaxlttb",
-                kw={"minmax_ratio": ratio},
-            )
-        )
-    return out
+    whole = (plain | (F.col("_dvg") == 1)) if detect else plain
+    cands = big.select(
+        *by, "rn", "v", whole.alias("_whole"), "xv", x_col,
+        F.explode("_pos").alias("pos"),
+    ).drop("pos")
+    small = pts.filter(F.col("n") <= n_out).select(
+        *by, F.col("rn").cast("long").alias("sel_idx"), F.col(x_col),
+        F.col("v").alias(y_col),
+    )
+    sel = _per_series(
+        cands, by, n_out, ("nan" if nan == "return" else "") + "minmaxlttb",
+        df.schema, x=(x_col, y_col, x_is_int), minmax_ratio=ratio,
+    )
+    return sel.unionByName(small)

@@ -8,14 +8,14 @@ both sides of the LSH self-join and its candidate pairs four times).
 ``materialize_shared`` runs the shared base ONCE per invocation and lets
 every consumer read the materialized blocks.
 
-Users: the long-form selectors ``minmax_long``, ``m4_long``,
-``minmaxlttb_long`` and ``minmaxlttb_x_long`` (operators/sql_selectors.py);
-``lsh_candidate_pairs``, ``jaccard_pairs`` and ``containment_pairs``
-(operators/dedup.py); ``tfidf_topk`` and ``pmi_collocations``
-(operators/frequency.py); ``inverted_index`` (operators/index.py);
-``session_association_rules`` (operators/assoc.py).  ``minmax_x_long`` /
-``m4_x_long`` do not use it: they are one window lineage whose collision
-fallback reuses the main branch's shuffle, so nothing is worth a persist.
+Users: ``lsh_candidate_pairs``, ``jaccard_pairs`` and
+``containment_pairs`` (operators/dedup.py); ``tfidf_topk`` and
+``pmi_collocations`` (operators/frequency.py); ``inverted_index``
+(operators/index.py); ``session_association_rules`` (operators/assoc.py).
+The long-form selectors (operators/sql_selectors.py) do not use it: each
+is one window lineage whose second consumers (collision fallback,
+MinMaxLTTB small-series branch) reuse the main branch's shuffle, so
+nothing there is worth a persist.
 
 Mechanics and constraints:
 
@@ -23,8 +23,10 @@ Mechanics and constraints:
   under AQE the checkpoint's LogicalRDD reports UnknownPartitioning,
   which re-introduces an exchange on bucketed sources;
   ``InMemoryTableScan`` preserves the cached plan's
-  outputPartitioning/ordering, so bucketed zero-Exchange plans survive
-  (pinned: tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source).
+  outputPartitioning/ordering, so bucketed zero-Exchange plans survive.
+  (tests/test_plans.py::test_long_selector_shuffle_free_on_bucketed_source
+  pins a zero-Exchange plan for ``minmax_long``, which no longer goes
+  through this persist; no test pins the property for the users above.)
   The eager count populates the cache in ONE job so concurrent
   downstream stages never race to compute it.
 * This is per-invocation work: every call recomputes from its input —

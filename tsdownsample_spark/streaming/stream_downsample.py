@@ -39,7 +39,9 @@ def stream_minmax(
     watermark closes windows.
     """
     by = list(by)
-    neg_us = (-F.unix_micros(F.col(x_col).cast("timestamp"))).alias("nus")
+    # explicit LTZ: a bare "timestamp" cast means NTZ under
+    # spark.sql.timestampType=TIMESTAMP_NTZ, which unix_micros rejects
+    neg_us = (-F.unix_micros(F.col(x_col).cast("timestamp_ltz"))).alias("nus")
     agg = (
         stream_df.withWatermark(x_col, watermark)
         .groupBy(*by, F.window(F.col(x_col), window).alias("w"))
