@@ -19,8 +19,9 @@ from tsdownsample_spark.operators.sql_selectors import (
 )
 
 N_OUT = 20
-# lengths: identity (<= n_out), just-above, plain-lttb branch, prefetch
-LENGTHS = [7, 20, 21, 57, 99, 500, 2003]
+# lengths: identity (<= n_out; 1 and 2 are too short to bin — a one-point
+# series has bin size 0), just-above, plain-lttb branch, prefetch
+LENGTHS = [1, 2, 7, 20, 21, 57, 99, 500, 2003]
 
 
 @pytest.fixture(scope="module")

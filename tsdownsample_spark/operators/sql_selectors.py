@@ -170,16 +170,17 @@ def _slot_lineage(
     by: list,
     m: int,
     k: int,
-    keep: str,
     nan: str = "forbid",
     small_bins: bool = False,
-    detect: bool = False,
-    x_is_int: bool = False,
+    collision: str | None = None,
 ) -> DataFrame:
     """The per-point slot choice every MinMax/M4/MinMaxLTTB long selector
-    reads.  ``pts`` carries (by..., rn, v, bin), plus (xv, prev_xv) when
-    ``detect``; the result adds ``_pos``, the sorted list of output
-    positions the point fills (NULL for none) — callers explode it.
+    reads.  ``pts`` carries (by..., rn, v, bin), ``bin`` NULL for a point
+    that is not binned, plus the columns ``collision`` reads; the result
+    adds ``_pos``, the sorted list of output positions the point fills
+    (NULL for none) — callers explode it.  Callers compute ``bin`` only
+    where it is needed, so the bin formulas never see a series too short
+    to bin (a one-point series has bin size 0).
 
     ONE per-(series, bin) Window gives every point its bin's count,
     first/last rn and first-occurrence argmin/argmax — min(struct(v, rn))
@@ -192,10 +193,11 @@ def _slot_lineage(
 
     Rules, first match wins:
 
-    * ``keep`` (SQL predicate): one position, ``rn`` — a series with
-      n <= n_out, or a MinMaxLTTB row outside the prefetch bins;
-    * ``detect``: a series _collision_flag marks (column ``_dvg``) fills
-      nothing — its caller reroutes it whole to the kernel;
+    * ``bin IS NULL``: one position, ``rn`` — a series with n <= n_out,
+      or a MinMaxLTTB row outside the prefetch bins;
+    * ``collision`` (SQL predicate, _collision_flag): a series in which
+      any point matches (column ``_dvg``) passes every point once too —
+      its caller runs the kernel on it whole;
     * ``bin >= m``: past the last edge, which the kernel drops;
     * ``small_bins`` (with-x only, minmax.rs:199-203 / m4.rs:206-210): a bin
       of <= k points passes each point through once;
@@ -220,10 +222,10 @@ def _slot_lineage(
         mn_rn.alias("mn_rn"),
         mx_rn.alias("mx_rn"),
     )
-    if detect:
+    if collision is not None:
         # normally ZERO series are flagged; the flag window rides the
         # existing hash(by) distribution, no extra exchange
-        flag = f"COALESCE(CAST(({_collision_flag(m, x_is_int)}) AS INT), 0)"
+        flag = f"COALESCE(CAST(({collision}) AS INT), 0)"
         pts = pts.withColumn(
             "_dvg", F.max(F.expr(flag)).over(Window.partitionBy(*by))
         )
@@ -235,8 +237,9 @@ def _slot_lineage(
         for js in (range(k), reversed(range(k)))
     )
     pos = (
-        "CASE WHEN " + keep + " THEN array(CAST(rn AS BIGINT)) "
-        + ("WHEN _dvg = 1 THEN NULL " if detect else "")
+        "CASE WHEN bin IS NULL "
+        + ("OR _dvg = 1 " if collision is not None else "")
+        + "THEN array(CAST(rn AS BIGINT)) "
         + f"WHEN bin >= {m} THEN NULL "
         + (f"WHEN cnt <= {k} THEN array({k} * bin + rn - bin_min_rn) " if small_bins else "")
         + f"WHEN rn IN ({', '.join(slots)}) "
@@ -260,8 +263,10 @@ def _downsample_long(
     output position."""
     by = list(by)
     m = n_out // k
-    pts = _ranked(df, by, order, y_col).withColumn("bin", F.expr(_bin_expr(m)))
-    pts = _slot_lineage(pts, by, m, k, f"n <= {n_out}", nan=nan)
+    pts = _ranked(df, by, order, y_col).withColumn(
+        "bin", F.expr(f"CASE WHEN n > {n_out} THEN {_bin_expr(m)} END")
+    )
+    pts = _slot_lineage(pts, by, m, k, nan=nan)
     return pts.select(
         *by, F.explode("_pos").alias("pos"),
         F.col("rn").cast("long").alias("sel_idx"), F.col("v").alias("sel_value"),
@@ -398,10 +403,11 @@ def _x_bin_expr(m: int, x_is_int: bool) -> str:
     )
 
 
-def _collision_flag(m: int, x_is_int: bool) -> str:
+def _collision_flag(m: int, x_is_int: bool, policy: str) -> str | None:
     """Per-point detector for the two closed-form-vs-sequential divergence
     sources (searchsorted.rs:112-127), evaluated on a frame carrying
-    (bin, xv, prev_xv, rn, bin_min_rn):
+    (bin, xv, prev_xv, rn, bin_min_rn) — or None where ``policy`` (the
+    selectors' ``collision_policy``) skips detection:
 
     * an edge-equal point that is its (closed-form) bin's FIRST point — at
       the first divergence in a series the sequentially-pushed point is
@@ -414,6 +420,8 @@ def _collision_flag(m: int, x_is_int: bool) -> str:
     One SQL predicate: Column-API composition costs a py4j round trip per
     node at build time.
     """
+    if not (policy == "exact" or (policy == "auto" and x_is_int)):
+        return None
     edge_at_bin = _x_edge_tmpl(m, x_is_int).format(i="bin")
     return (
         f"bin < {m} AND xv = {edge_at_bin} "
@@ -511,20 +519,19 @@ def _downsample_x_long(
     by = list(by)
     m = n_out // k
     pts, x_is_int = _x_ranked(df, by, x_col, tiebreak, y_col)
-    detect = collision_policy == "exact" or (
-        collision_policy == "auto" and x_is_int
-    )
+    collision = _collision_flag(m, x_is_int, collision_policy)
+    bin_sql = f"CASE WHEN n > {n_out} THEN {_x_bin_expr(m, x_is_int)} END"
     pts = _slot_lineage(
-        pts.withColumn("bin", F.expr(_x_bin_expr(m, x_is_int))), by, m, k,
-        f"n <= {n_out}", nan=nan, small_bins=True, detect=detect,
-        x_is_int=x_is_int,
+        pts.withColumn("bin", F.expr(bin_sql)), by, m, k,
+        nan=nan, small_bins=True, collision=collision,
     )
-    out = pts.select(
+    out = pts if collision is None else pts.filter("_dvg = 0")
+    out = out.select(
         *by, F.col("rn").cast("long").alias("sel_idx"), F.col(x_col),
         F.col("v").alias(y_col), F.explode("_pos").alias("pos"),
     ).drop("pos")
-    if detect:
-        collided = pts.filter((F.col("n") > n_out) & (F.col("_dvg") == 1)).select(
+    if collision is not None:
+        collided = pts.filter("_dvg = 1").select(
             *by, "rn", "v", F.lit(True).alias("_whole"), "xv", x_col
         )
         algo = ("nan" if nan == "return" else "") + ("minmax" if k == 2 else "m4")
@@ -618,7 +625,7 @@ def minmaxlttb_long(
     big = pts.filter(F.col("n") > n_out).withColumn(
         "bin", F.when(interior, F.expr(_bin_expr(m, rn="(rn - 1)", n="(n - 2)")))
     )
-    cands = _slot_lineage(big, by, m, 2, "bin IS NULL", nan=nan).select(
+    cands = _slot_lineage(big, by, m, 2, nan=nan).select(
         *by, "rn", "v", plain.alias("_whole"), F.explode("_pos").alias("pos")
     ).drop("pos")
     small = pts.filter(F.col("n") <= n_out).select(
@@ -666,9 +673,7 @@ def minmaxlttb_x_long(
     by = list(by)
     m = n_out * ratio // 2
     pts, x_is_int = _x_ranked(df, by, x_col, tiebreak, y_col)
-    detect = collision_policy == "exact" or (
-        collision_policy == "auto" and x_is_int
-    )
+    collision = _collision_flag(m, x_is_int, collision_policy)
     # prefetch: interior equidistant MinMax (kernel: minmax(y[1:n-1],
     # n_out*ratio, x=x[1:n-1])) — bin edges span the INTERIOR x range
     wp = Window.partitionBy(*by)
@@ -682,10 +687,9 @@ def minmaxlttb_x_long(
         .withColumn("bin", F.when(interior, F.expr(_x_bin_expr(m, x_is_int))))
     )
     big = _slot_lineage(
-        big, by, m, 2, "bin IS NULL OR _dvg = 1" if detect else "bin IS NULL",
-        nan=nan, small_bins=True, detect=detect, x_is_int=x_is_int,
+        big, by, m, 2, nan=nan, small_bins=True, collision=collision
     )
-    whole = (plain | (F.col("_dvg") == 1)) if detect else plain
+    whole = plain if collision is None else plain | (F.col("_dvg") == 1)
     cands = big.select(
         *by, "rn", "v", whole.alias("_whole"), "xv", x_col,
         F.explode("_pos").alias("pos"),
