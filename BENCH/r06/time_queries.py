@@ -1,15 +1,17 @@
 #!/usr/bin/env python
 """Targeted query timing with the noop sink (guide section 1.4/1.5).
 
-Usage: python time_queries.py <sf_dir> q_a,q_b,... [reps=3]
-Prints one line per query: name min median reps.
+Usage: python BENCH/r06/time_queries.py <sf_dir> q_a,q_b,... [reps=3]
+Times the checkout this copy of the script lives in.  Prints one line per
+query (name, min wall, every rep's wall), then all reps as one JSON object.
 """
 import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[2]))
 
 SF = sys.argv[1]
 NAMES = sys.argv[2].split(",")

@@ -53,51 +53,6 @@ class TestJvmParity:
                 exp = KERNELS[algo](np.asarray(toks, dtype=np.int32), n_out)
                 assert list(got[i]) == list(exp), f"row {i} len {len(toks)}"
 
-    @pytest.mark.parametrize(
-        "algo,n_out",
-        [("minmax", 100), ("minmax", 2000), ("m4", 100), ("m4", 2000)],
-    )
-    def test_fold_form_bit_parity(self, spark, tok_df, algo, n_out):
-        """form='fold' (single-pass per-bin argmin/argmax aggregate — no
-        slice copy, no rescans) must be bit-identical to the kernel too,
-        including first-occurrence ties on the vocab-50 duplicate data."""
-        rows, df = tok_df
-        got = {
-            r.doc_id: r.sel_idx
-            for r in downsample_tokens(
-                df, n_out, algo=algo, impl="jvm", jvm_form="fold"
-            ).collect()
-        }
-        for i, toks in rows:
-            if toks is None:
-                assert got[i] is None
-            elif not toks:
-                assert list(got[i]) == []
-            else:
-                exp = KERNELS[algo](np.asarray(toks, dtype=np.int32), n_out)
-                assert list(got[i]) == list(exp), f"row {i} len {len(toks)}"
-
-    def test_fold_form_plan_is_python_free(self, spark, tok_df):
-        _, df = tok_df
-        plan = (
-            downsample_tokens(df, 2000, algo="m4", impl="jvm", jvm_form="fold")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        for marker in (
-            "ArrowEvalPython",
-            "BatchEvalPython",
-            "MapInArrow",
-            "FlatMapGroupsInPandas",
-            "Exchange",
-        ):
-            assert marker not in plan
-
-    def test_expr_rejects_unknown_form(self):
-        with pytest.raises(ValueError, match="form must be"):
-            jvm_select_expr("minmax", 100, form="vectorized")
-
     def test_select_mode_gathers_values(self, spark, tok_df):
         rows, df = tok_df
         by_id = dict(rows)

@@ -7,9 +7,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tsdownsample_spark.kernels.batch import batch_downsample
+from tsdownsample_spark.kernels.flat import flat_downsample, select_and_gather
 from tsdownsample_spark.kernels.selectors import downsample_array
 from tsdownsample_spark.operators.downsample import (
+    ALGOS,
     downsample_series,
     downsample_tokens,
     gather_values,
@@ -35,6 +36,7 @@ ALGO_NOUT = [
     ("everynth", 100),
     ("nanminmax", 200),
     ("nanm4", 200),
+    ("nanminmaxlttb", 100),
 ]
 
 
@@ -74,19 +76,79 @@ def test_batch_matches_per_series():
     rng = np.random.default_rng(5)
     # 114/202/254 are lengths where the last equal-count bin's floor product
     # rounds down and excludes the series tail (reference FP behavior) —
-    # regression guard for the batch concatenation layout.
+    # regression guard for the flat buffer layout.
     arrays = [rng.standard_normal(n) for n in (50, 1_000, 114, 202, 254, 10_032, 3, 2_321)]
-    for algo in ("minmax", "m4", "nanminmax", "nanm4", "minmaxlttb", "everynth"):
-        batched = batch_downsample(arrays, 100, algo=algo)
-        for a, b in zip(arrays, batched):
-            np.testing.assert_array_equal(b, downsample_array(a, 100, algo=algo))
+    offsets = np.concatenate([[0], np.cumsum([len(a) for a in arrays])])
+    for algo in ALGOS:
+        flat, out_off = flat_downsample(np.concatenate(arrays), offsets, 100, algo)
+        for s, a in enumerate(arrays):
+            np.testing.assert_array_equal(
+                flat[out_off[s] : out_off[s + 1]],
+                downsample_array(a, 100, algo=algo),
+                err_msg=f"{algo} len {len(a)}",
+            )
 
 
+# the null slot's NaN/inf values run through the kernel and warn; its
+# selection is masked to null
+@pytest.mark.filterwarnings("ignore::RuntimeWarning")
 def test_batch_handles_nulls():
-    arrays = [np.arange(100.0), None, np.arange(5.0)]
-    out = batch_downsample(arrays, 10, algo="minmax")
-    assert out[1] is None
-    assert out[2].tolist() == [0, 1, 2, 3, 4]
+    """Null rows run through the flat kernel (``select_and_gather``) and come
+    back null; every other row matches the per-series kernel, for every
+    algo over int32 and float64.  The input holds a null row with an empty
+    offset range, a null slot whose range holds values (legal Arrow; NaN/inf
+    for floats), an empty row, and is a slice of a larger array so its
+    offsets do not start at 0."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(23)
+    for dtype in (np.int32, np.float64):
+
+        def values(n):
+            return (rng.standard_normal(n) * 1_000).astype(dtype)
+
+        if dtype is np.float64:
+            junk = np.array([np.nan, np.inf, -np.inf, 1e308, 0.0, -1.0] * 50)
+        else:
+            junk = np.iinfo(np.int32).max - np.arange(300, dtype=dtype)
+        # (is null, the slot's values in the child array)
+        slots = [
+            (False, values(7)),
+            (False, values(3_000)),
+            (True, values(0)),
+            (False, values(0)),
+            (False, values(114)),
+            (False, values(450)),
+            (True, junk),
+            (False, values(202)),
+            (False, values(1)),
+        ]
+        offsets = np.concatenate([[0], np.cumsum([len(v) for _, v in slots])])
+        full = pa.ListArray.from_arrays(
+            pa.array(offsets.astype(np.int32)),
+            pa.array(np.concatenate([v for _, v in slots])),
+            mask=pa.array([is_null for is_null, _ in slots]),
+        )
+        col = full.slice(1)  # offset != 0: the 7-point row is cut off
+        assert col.offsets[0].as_py() == 7
+        for algo in ALGOS:
+            sel_arr, tok_arr = select_and_gather(col, 100, algo)
+            assert len(sel_arr) == len(tok_arr) == len(col)
+            assert tok_arr.type == col.type
+            for (is_null, row), sel, tok in zip(
+                slots[1:], sel_arr.to_pylist(), tok_arr.to_pylist()
+            ):
+                where = f"{algo} {dtype.__name__} len {len(row)}"
+                if is_null:
+                    assert sel is None and tok is None, where
+                    continue
+                exp = downsample_array(row, 100, algo=algo)
+                assert sel == exp.tolist(), where
+                np.testing.assert_array_equal(
+                    np.asarray(tok, dtype=dtype), row[exp], err_msg=where
+                )
+            sel_only, no_tok = select_and_gather(col, 100, algo, gather=False)
+            assert no_tok is None and sel_only.equals(sel_arr), algo
 
 
 def test_long_form_series_parity(spark):
@@ -157,6 +219,8 @@ def test_validation_errors(spark, token_df):
         downsample_tokens(token_df, 10, algo="nope")
     with pytest.raises(ValueError):
         downsample_tokens(token_df, 2, algo="lttb")
+    with pytest.raises(ValueError, match="impl"):
+        downsample_tokens(token_df, 100, algo="minmax", impl="arow")
 
 
 def test_output_select_matches_append(token_df):
@@ -174,8 +238,6 @@ def test_output_select_matches_append(token_df):
         .select("doc_id", "sel_idx", "sel_tokens").collect()
     )
     assert a == b
-    with pytest.raises(ValueError, match="arrow"):
-        downsample_tokens(token_df, 48, impl="pandas", output="select")
 
 
 def test_scan_downsample_matches_operator(spark, tmp_path):

@@ -5,9 +5,9 @@ Re-expresses the operator semantics of ``predict-idlab/tsdownsample``
 (reference: /root/reference, v0.1.4.1) Spark-first:
 
 - per-series downsampling selectors (MinMax, M4, LTTB, MinMaxLTTB, EveryNth,
-  and their NaN-policy variants) as vectorized NumPy kernels driven through
-  Arrow-batched pandas UDFs — one narrow map stage, no shuffle, for the
-  token-table form;
+  and their NaN-policy variants) as vectorized NumPy kernels run by
+  ``mapInArrow`` over whole Arrow batches — one narrow map stage, no
+  shuffle, for the token-table form;
 - continuous-aggregate retention tiers (raw -> 1m -> 1h -> 1d) as cascaded
   decomposable Spark aggregations;
 - gap-fill, delta-of-delta + Gorilla XOR compression codecs;

@@ -215,8 +215,6 @@ def _flat_lttb(values, offsets, n_out):
     if len(big):
         mean_bucket = ns[big].sum() / (len(big) * n_out)
         if mean_bucket >= _LTTB_PER_SERIES_BUCKET:
-            from tsdownsample_spark.kernels.selectors import lttb
-
             for s in big:
                 results[s] = lttb(values[offsets[s] : offsets[s + 1]], n_out)
             sel_flat = None
@@ -333,36 +331,21 @@ def select_and_gather(col, n_out: int, algo: str, gather: bool = True, **kw):
     """
     import pyarrow as pa
 
-    from tsdownsample_spark.kernels.batch import batch_downsample
-
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
-    if col.null_count:
-        # slow path for null rows
-        arrays = [None if v is None else np.asarray(v) for v in col.to_pylist()]
-        sel = batch_downsample(arrays, n_out, algo=algo, **kw)
-        sel_arr = pa.array(
-            [None if s is None else s for s in sel], type=pa.list_(pa.int64())
-        )
-        tok_arr = (
-            pa.array(
-                [
-                    None if s is None else np.asarray(a)[s]
-                    for a, s in zip(arrays, sel)
-                ],
-                type=pa.list_(col.type.value_type),
-            )
-            if gather
-            else None
-        )
-        return sel_arr, tok_arr
     offsets = col.offsets.to_numpy()
     values = col.values.to_numpy(zero_copy_only=False)
     flat, out_off = flat_downsample(values, offsets, n_out, algo, **kw)
+    # a null row runs as the segment its offsets span (empty as Spark and
+    # Parquet write it; arbitrary values are legal Arrow) and is masked back
+    # to null, so nulls cost no copy of the batch
+    mask = col.is_null() if col.null_count else None
     oo = pa.array(out_off, type=pa.int32())
-    sel_arr = pa.ListArray.from_arrays(oo, pa.array(flat, type=pa.int64()))
+    sel_arr = pa.ListArray.from_arrays(
+        oo, pa.array(flat, type=pa.int64()), mask=mask
+    )
     tok_arr = None
     if gather:
         abs_idx = flat + np.repeat(offsets[:-1].astype(np.int64), np.diff(out_off))
-        tok_arr = pa.ListArray.from_arrays(oo, pa.array(values[abs_idx]))
+        tok_arr = pa.ListArray.from_arrays(oo, pa.array(values[abs_idx]), mask=mask)
     return sel_arr, tok_arr

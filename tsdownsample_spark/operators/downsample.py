@@ -4,11 +4,12 @@ Two physical shapes, both shuffle-free where possible:
 
 * **Token-table form** ("no x" mode, BASELINE input_hint): one row per
   series, ``tokens: array<int32>``.  ``downsample_tokens`` is a *narrow map*
-  — a scalar Arrow pandas UDF computing selected indices per row.  The plan
-  is ``Scan -> ArrowEvalPython -> Project``: zero shuffle, embarrassingly
-  parallel across partitions, scales linearly with executors.  Inside the
-  UDF, the whole Arrow batch of series is downsampled in one vectorized pass
-  (kernels.batch).
+  — ``mapInArrow`` computing selected indices per row.  The plan is
+  ``Scan -> MapInArrow``: zero shuffle, embarrassingly parallel across
+  partitions, scales linearly with executors.  Inside the map, the whole
+  Arrow batch of series is downsampled in one vectorized pass over the list
+  column's (values, offsets) buffers (kernels.flat).  ``impl="jvm"`` runs
+  the MinMax/M4/EveryNth selectors as Catalyst expressions instead.
 
 * **Long (exploded) form** ("with x" mode): rows ``(series key, x, y)``.
   ``downsample_series`` groups by the series key (one shuffle — unavoidable:
@@ -32,9 +33,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
-from tsdownsample_spark.kernels.batch import batch_downsample
 from tsdownsample_spark.kernels.selectors import downsample_array
 
 ALGOS = (
@@ -78,37 +77,24 @@ def downsample_tokens(
 
     ``impl="arrow"`` (default) runs via ``mapInArrow`` directly on the list
     column's (values, offsets) buffers — zero per-row Python objects, one
-    flat kernel pass per batch.  ``impl="pandas"`` is the scalar-pandas-UDF
-    reference path (used to cross-check the fast path in tests).
+    flat kernel pass per batch.  ``impl="jvm"`` (MinMax, M4, EveryNth) runs
+    the selector as Catalyst expressions with no Python worker
+    (:func:`jvm_select_expr`).
 
-    ``output="select"`` (arrow impl only) drops ``tokens_col`` from the
-    output and emits ``sel_tokens`` (the gathered selected values) next to
-    ``idx_col`` — the 100 TB shape: the raw token arrays are NOT serialized
-    back across the Python->JVM Arrow boundary (that return leg otherwise
-    re-ships the entire input column, ~n/n_out times more bytes than the
-    selection itself).  ``output="append"`` keeps the input columns intact.
+    ``output="select"`` drops ``tokens_col`` from the output and emits
+    ``sel_tokens`` (the gathered selected values) next to ``idx_col`` — the
+    100 TB shape: the raw token arrays are NOT serialized back across the
+    Python->JVM Arrow boundary (that return leg otherwise re-ships the
+    entire input column, ~n/n_out times more bytes than the selection
+    itself).  ``output="append"`` keeps the input columns intact.
     """
     _validate(algo, n_out)
     if output not in ("append", "select"):
         raise ValueError("output must be 'append' or 'select'")
+    if impl not in ("arrow", "jvm"):
+        raise ValueError("impl must be 'arrow' or 'jvm'")
     if impl == "jvm":
-        return _jvm_downsample(
-            df, n_out, algo, tokens_col, idx_col, output,
-            form=kw.pop("jvm_form", "slice"),
-        )
-    if impl == "pandas":
-        if output != "append":
-            raise ValueError("output='select' requires impl='arrow'")
-
-        @pandas_udf("array<bigint>")
-        def _select(col: pd.Series) -> pd.Series:
-            arrays = [None if v is None else np.asarray(v) for v in col]
-            return pd.Series(
-                batch_downsample(arrays, n_out, algo=algo, **kw), index=col.index
-            )
-
-        return df.withColumn(idx_col, _select(F.col(tokens_col)))
-
+        return _jvm_downsample(df, n_out, algo, tokens_col, idx_col, output)
     return _arrow_downsample_specs(
         df, [(algo, n_out, idx_col, "sel_tokens")], tokens_col, output, **kw
     )
@@ -117,9 +103,7 @@ def downsample_tokens(
 _JVM_ALGOS = ("minmax", "m4", "everynth")
 
 
-def jvm_select_expr(
-    algo: str, n_out: int, tokens_col: str = "tokens", form: str = "slice"
-) -> str:
+def jvm_select_expr(algo: str, n_out: int, tokens_col: str = "tokens") -> str:
     """Selected-indices expression for ``algo`` as a pure Catalyst
     higher-order-function SQL string — ZERO Python in the plan.
 
@@ -170,56 +154,10 @@ def jvm_select_expr(
             f"WHEN size({t}) = 0 THEN array() "
             f"ELSE {body} END"
         )
-    if form not in ("slice", "fold"):
-        raise ValueError("form must be 'slice' or 'fold'")
     nb = n_out // (2 if algo == "minmax" else 4)
     bs = f"((size({t}) - 1) / CAST({nb} AS DOUBLE))"
     lo = f"(CASE WHEN b = 0 THEN 0 ELSE CAST(FLOOR({bs} * b) AS INT) + 1 END)"
     hi = f"(CAST(FLOOR({bs} * (b + 1)) AS INT) + 1)"
-    if form == "fold":
-        # Single-pass per-bin argmin/argmax fold over the INDEX sequence:
-        # no slice copy, no array_min/array_max/array_position rescans —
-        # 1 traversal per bin instead of ~4 plus an allocation.  The init
-        # is the bin's first element, and the fold visits it again as a
-        # harmless identity step (strict </> against itself is false), so
-        # no sentinel values are needed and the expression stays generic
-        # over the element type.  Strict comparisons keep the FIRST
-        # occurrence — the kernel/array_position tie rule.
-        # field names must differ case-INSENSITIVELY (Spark resolves
-        # struct fields case-insensitively: 'am'/'aM' would be ambiguous)
-        el = f"element_at({t}, i + 1)"
-        init = (
-            f"named_struct('mn', element_at({t}, {lo} + 1), "
-            f"'ai', CAST({lo} AS BIGINT), "
-            f"'mx', element_at({t}, {lo} + 1), "
-            f"'aj', CAST({lo} AS BIGINT))"
-        )
-        upd = (
-            f"named_struct("
-            f"'mn', IF({el} < acc.mn, {el}, acc.mn), "
-            f"'ai', IF({el} < acc.mn, CAST(i AS BIGINT), acc.ai), "
-            f"'mx', IF({el} > acc.mx, {el}, acc.mx), "
-            f"'aj', IF({el} > acc.mx, CAST(i AS BIGINT), acc.aj))"
-        )
-        fold = f"aggregate(sequence({lo}, {hi} - 1), {init}, (acc, i) -> {upd})"
-        if algo == "minmax":
-            per = "array(LEAST(s.ai, s.aj), GREATEST(s.ai, s.aj))"
-        else:  # m4
-            per = (
-                f"array(CAST({lo} AS BIGINT), LEAST(s.ai, s.aj), "
-                f"GREATEST(s.ai, s.aj), CAST({hi} - 1 AS BIGINT))"
-            )
-        body = (
-            f"flatten(transform(sequence(0, {nb - 1}), b -> "
-            f"element_at(transform(array({fold}), s -> {per}), 1)))"
-        )
-        return (
-            f"CASE WHEN {t} IS NULL THEN NULL "
-            f"WHEN size({t}) = 0 THEN array() "
-            f"WHEN size({t}) <= {n_out} THEN "
-            f"sequence(CAST(0 AS BIGINT), CAST(size({t}) - 1 AS BIGINT)) "
-            f"ELSE {body} END"
-        )
     amin = f"CAST({lo} + array_position(sub, array_min(sub)) - 1 AS BIGINT)"
     amax = f"CAST({lo} + array_position(sub, array_max(sub)) - 1 AS BIGINT)"
     if algo == "minmax":
@@ -254,7 +192,6 @@ def _jvm_downsample(
     tokens_col: str,
     idx_col: str,
     output: str,
-    form: str = "slice",
 ) -> DataFrame:
     """``impl="jvm"`` branch of :func:`downsample_tokens`: the whole
     selector runs as Catalyst expressions inside whole-stage codegen — no
@@ -263,7 +200,7 @@ def _jvm_downsample(
     gathered ``sel_tokens``)."""
     if idx_col in df.columns:
         raise ValueError(f"column {idx_col!r} already exists")
-    sel = F.expr(jvm_select_expr(algo, n_out, tokens_col, form=form)).alias(idx_col)
+    sel = F.expr(jvm_select_expr(algo, n_out, tokens_col)).alias(idx_col)
     if output == "append":
         return df.select("*", sel)
     gathered = F.expr(
