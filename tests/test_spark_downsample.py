@@ -242,7 +242,7 @@ def test_output_select_matches_append(token_df):
 
 def test_scan_downsample_matches_operator(spark, tmp_path):
     """Kernel-side scan source == the mapInArrow operator, across multiple
-    files / row groups and through the null-row slow path."""
+    files / row groups and through a null row."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
