@@ -301,3 +301,44 @@ def test_connected_components_round_is_window_based(spark):
     plan = _plan(connected_components(pairs, max_iter=1))
     assert "collect_list" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_rollup_cycle_generated_code_stays_cached(spark):
+    """A rollup-shaped op mix (tiers, locf gap-fill, compress round trip,
+    m4_x_long) generates ~105 distinct classes, more than Spark's default
+    codegen cache of 100 holds.  The session's cache must hold them all, so
+    a second run of the same mix compiles nothing."""
+    from tsdownsample_spark.operators.compress import compress_series, decompress_series
+    from tsdownsample_spark.operators.gapfill import gap_fill
+    from tsdownsample_spark.operators.rollup import retention_tiers, with_derived
+    from tsdownsample_spark.operators.sql_selectors import m4_x_long
+    from tsdownsample_spark.plans.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    df = spark.range(8 * 400).selectExpr(
+        "id div 400 AS series_key",
+        # 15 s cadence, one 30 min gap per series, series offset by 7 s
+        "timestamp_micros(1700000000000000 + (id % 400) * 15000000"
+        " + CASE WHEN id % 400 >= 250 THEN 1800000000 ELSE 0 END"
+        " + (id div 400) * 7000000) AS ts",
+        "sin(id * 0.37) AS value",
+    )
+    by = ["series_key"]
+
+    def mix():
+        tiers = retention_tiers(df, by=by)
+        tiers["1d"].toArrow()
+        filled = gap_fill(with_derived(tiers["1m"]), every="1 minute",
+                          value_cols=("agg_avg",), strategy="locf")
+        filled.agg(F.count("*"), F.sum(F.col("is_gap").cast("int")),
+                   F.sum("agg_avg")).collect()
+        packed = compress_series(df, by=by, chunk_span=6 * 3600 * 10**6).toArrow()
+        decompress_series(spark.createDataFrame(packed), by=by).toArrow()
+        m4_x_long(df, 40, x_col="ts", by=by, y_col="value").select(
+            "series_key", "sel_idx").toArrow()
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    mix()
+    before = compiles.getCount()
+    mix()
+    assert compiles.getCount() - before == 0

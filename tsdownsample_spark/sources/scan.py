@@ -18,7 +18,13 @@ When to use which path (measured on the bench host, 200 M pts, 32 cores):
   on hosts where the JVM hop is the binding constraint (fast NVMe, high
   memory bandwidth, many cores) it removes that leg entirely.  It is also
   the shape that generalizes to remote object storage: tasks fetch + decode
-  + reduce locally and ship back only selections.
+  + reduce locally and ship back only selections.  At small sizes it is
+  slower, not equal: on a 480-document table (~7.7 M pts, 24 files) at
+  ``local[3]`` one minmax query took ~1.0 s against ~0.4 s for
+  ``downsample_tokens``.  Its fixed per-query steps (driver footer reads,
+  a ``createDataFrame`` of the task plan, a schema read, then a
+  ``repartition`` shuffle before the scan tasks) outweigh the Arrow hop it
+  saves (BENCH/BASELINE.md "Round-8").
 
 Task planning: row groups are packed greedily into ``tasks`` batches by
 compressed byte size, so skewed row groups don't straggle.
