@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -78,3 +79,18 @@ def stage_batches(spark, tmp_path, batches, schema):
                 _shutil.copy(_os.path.join(d, f), dst)
                 _os.utime(dst, (now - 600 + 60 * j, now - 600 + 60 * j))
     return flat
+
+
+@contextlib.contextmanager
+def timestamp_type(spark, ts_type):
+    """Run a block under ``spark.sql.timestampType=ts_type``, restoring the
+    previous setting afterwards."""
+    prev = spark.conf.get("spark.sql.timestampType", None)
+    spark.conf.set("spark.sql.timestampType", ts_type)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.timestampType")
+        else:
+            spark.conf.set("spark.sql.timestampType", prev)

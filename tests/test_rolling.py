@@ -9,6 +9,7 @@ import datetime as dt
 import math
 
 import pytest
+from conftest import timestamp_type
 
 from tsdownsample_spark.operators.rolling import (
     duration_to_micros,
@@ -324,9 +325,13 @@ def test_distinct_exclude_current_empty_frame(spark):
     assert got[_ts(5)] == 1
 
 
-def test_prefix_impl_matches_frame(spark):
+@pytest.mark.parametrize("ts_type", ["TIMESTAMP_LTZ", "TIMESTAMP_NTZ"])
+def test_prefix_impl_matches_frame(spark, ts_type):
     """impl='prefix' (O(n) growing-frame differences) == impl='frame' to
-    float-summation-order tolerance; count/min/max exact."""
+    float-summation-order tolerance; count/min/max exact.  Runs under both
+    spark.sql.timestampType settings with an LTZ event time; under
+    TIMESTAMP_NTZ a bare "timestamp" cast inside the operator would turn
+    it into NTZ, which ``unix_micros`` rejects."""
     import random
 
     random.seed(11)
@@ -334,12 +339,19 @@ def test_prefix_impl_matches_frame(spark):
         ("c", _ts(random.randint(0, 600)), round(random.uniform(-50, 50), 2))
         for _ in range(300)
     ]
-    df = _mk(spark, rows)
     kw = dict(x_col="ts", y_col="value", by=["k"], duration="1 minute",
               min_obs=3)
     key = lambda r: (r["k"], r["ts"], r["value"])  # noqa: E731
-    frame = {key(r): r for r in rolling_time_stats(df, impl="frame", **kw).collect()}
-    prefix = {key(r): r for r in rolling_time_stats(df, impl="prefix", **kw).collect()}
+    with timestamp_type(spark, ts_type):
+        df = spark.createDataFrame(
+            rows, "k string, ts timestamp_ltz, value double"
+        )
+        frame = {
+            key(r): r for r in rolling_time_stats(df, impl="frame", **kw).collect()
+        }
+        prefix = {
+            key(r): r for r in rolling_time_stats(df, impl="prefix", **kw).collect()
+        }
     assert set(frame) == set(prefix)
     for k, fr in frame.items():
         pr = prefix[k]

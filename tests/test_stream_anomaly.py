@@ -1,6 +1,7 @@
-"""Streaming rolling z-score == batch operator (prefix impl) over the same
-events, including frames that straddle the micro-batch boundary, NULL y,
-and the warm-up NULL placement; plus the all-late-batch frontier guard."""
+"""Streaming rolling z-score == batch operator (grouped impl, the kernel
+both run) over the same events, including frames that straddle the
+micro-batch boundary, NULL y, and the warm-up NULL placement; constant
+frames score nothing; plus the all-late-batch frontier guard."""
 
 import numpy as np
 import pandas as pd
@@ -19,7 +20,7 @@ def test_stream_zscore_matches_batch(spark, tmp_path, sf_dir):
         .dropDuplicates(["event_type", "ts"])
         .select(
             "event_type",
-            F.col("ts").cast("timestamp").alias("ts"),
+            F.col("ts").cast("timestamp_ltz").alias("ts"),
             # deterministic NULL sprinkle exercises the mask lanes
             F.when(F.col("event_id") % 31 == 0, None)
             .otherwise(F.col("value"))
@@ -30,42 +31,83 @@ def test_stream_zscore_matches_batch(spark, tmp_path, sf_dir):
     stream = (
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
-    out = stream_rolling_zscore(
-        stream, x_col="ts", y_col="value", by=["event_type"], window=50, min_obs=10
-    )
+    got = _run(spark, tmp_path, stream, "szscore", window=50, min_obs=10)
+    exp = _batch(ev, "grouped", window=50, min_obs=10)
+    _assert_matches(got, exp)
+
+
+def _run(spark, tmp_path, stream, name, **kw):
+    out = stream_rolling_zscore(stream, x_col="ts", y_col="value",
+                                by=["event_type"], **kw)
     q = (
         out.writeStream.format("memory")
-        .queryName("szscore")
+        .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(180)
-    got = {
-        (r["event_type"], r["ts_us"]): r for r in spark.table("szscore").collect()
-    }
-    exp_rows = (
-        rolling_zscore(
-            ev, x_col="ts", y_col="value", by=["event_type"], window=50,
-            min_obs=10, impl="prefix",
-        )
+    return spark.table(name).collect()
+
+
+def _batch(ev, impl, **kw):
+    return (
+        rolling_zscore(ev, x_col="ts", y_col="value", by=["event_type"],
+                       impl=impl, **kw)
         .select(
             "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-            "roll_mean", "roll_std", "z", "is_anomaly",
+            F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
+            "value", "roll_mean", "roll_std", "z", "is_anomaly",
         )
         .collect()
     )
-    assert len(exp_rows) == len(got) > 0
-    for er in exp_rows:
+
+
+def _assert_matches(got, exp, rel=1e-12):
+    """Same rows; every NULL and ``is_anomaly`` exact; mean to ``rel``;
+    std to ``rel`` of the data's magnitude (the kernel centres on the mean
+    of the rows it is given) and z to that propagated."""
+    got = {(r["event_type"], r["ts_us"]): r for r in got}
+    assert len(exp) == len(got) > 0
+    scale = rel * max(abs(r["value"] or 0.0) for r in exp)
+    for er in exp:
         gr = got[(er["event_type"], er["ts_us"])]
         for col in ("roll_mean", "roll_std", "z"):
-            ev_, gv = er[col], gr[col]
-            assert (ev_ is None) == (gv is None), (er, col)
-            if ev_ is not None:
-                assert gv == pytest.approx(ev_, rel=1e-7, abs=1e-9), (er, col)
+            assert (er[col] is None) == (gr[col] is None), (er, col)
         assert gr["is_anomaly"] == er["is_anomaly"], er
+        if er["roll_mean"] is not None:
+            assert gr["roll_mean"] == pytest.approx(er["roll_mean"], rel=rel), er
+        if er["roll_std"] is not None:
+            assert abs(gr["roll_std"] - er["roll_std"]) <= scale, er
+        if er["z"] is not None:
+            bound = scale * (1.0 + abs(er["z"])) / er["roll_std"]
+            assert abs(gr["z"] - er["z"]) <= bound, er
+
+
+def test_constant_run_scores_nothing(spark, tmp_path):
+    """A constant trailing frame has std exactly 0 and NULL z/is_anomaly
+    in the stream, as in ``impl="frame"`` and ``"grouped"``."""
+    t = lambda s: (pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)).to_pydatetime()
+    lead = [("a", t(i), v) for i, v in enumerate((3.7, 11.2, 0.4))]
+    run = [("a", t(10 + i), 0.7) for i in range(40)]
+    schema = "event_type string, ts timestamp, value double"
+    flat = stage_batches(spark, tmp_path, [lead + run[:20], run[20:]], schema)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(flat)
+    )
+    got = _run(spark, tmp_path, stream, "szscore_flat", window=10, min_obs=5)
+    ev = spark.createDataFrame(lead + run, schema)
+    for impl in ("frame", "grouped"):
+        exp = _batch(ev, impl, window=10, min_obs=5)
+        # frame sums in its own order: mean/std agree to ~1e-9 there
+        _assert_matches(got, exp, rel=1e-12 if impl == "grouped" else 1e-9)
+        for rows in (exp, got):
+            flat_rows = sorted(rows, key=lambda r: r["ts_us"])[13:]
+            assert len(flat_rows) == 30
+            for r in flat_rows:
+                assert r["roll_std"] == 0.0, (impl, r)
+                assert r["z"] is None and r["is_anomaly"] is None, (impl, r)
 
 
 def test_stream_zscore_all_late_batch_does_not_regress_state(spark, tmp_path):

@@ -1,15 +1,17 @@
 """Streaming trailing-window distinct count == batch rolling_time_distinct
-over the same events, Fenwick last-occurrence sweep state straddling
-micro-batch boundaries; plus the pure-python sweep's unit truth."""
+over the same events, with the carried pool straddling micro-batch
+boundaries; plus the shared distinct kernel's unit truth."""
 
 import pandas as pd
 import pytest
 from conftest import make_file_stream, stage_batches
 from pyspark.sql import functions as F
 
-from tsdownsample_spark.operators.rolling import rolling_time_distinct
+from tsdownsample_spark.operators.rolling import (
+    _frame_distinct,
+    rolling_time_distinct,
+)
 from tsdownsample_spark.streaming.stream_distinct import (
-    _sliding_distinct,
     stream_rolling_time_distinct,
 )
 
@@ -18,13 +20,19 @@ _EPOCH_US = 1_704_067_200_000_000  # 2024-01-01 in unix micros
 
 
 def test_sweep_unit_truth():
+    """Each [lo, hi) query over ts = 0..5 is the trailing frame of the row
+    at ts hi - 1 with span hi - 1 - lo."""
     import numpy as np
 
     ts = np.array([0, 1, 2, 3, 4, 5], dtype=np.int64)
     vals = np.array([1.0, 2.0, 1.0, 3.0, 2.0, 1.0])
+    codes = pd.factorize(vals)[0]
     lo = np.array([0, 0, 1, 2, 3, 5])
     hi = np.array([1, 3, 4, 5, 6, 6])
-    got = _sliding_distinct(ts, vals, lo, hi).tolist()
+    got = [
+        int(_frame_distinct(ts[:b], codes[:b], b - 1 - a)[-1])
+        for a, b in zip(lo, hi)
+    ]
     exp = [len(set(vals[a:b])) for a, b in zip(lo, hi)]
     assert got == exp == [1, 2, 3, 3, 3, 1]
 
@@ -47,7 +55,7 @@ def _run(spark, tmp_path, stream, name, **kw):
 def test_stream_distinct_matches_batch(spark, tmp_path, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_type",
-        F.col("ts").cast("timestamp").alias("ts"),
+        F.col("ts").cast("timestamp_ltz").alias("ts"),
         F.col("user_id").cast("double").alias("value"),
     )
     flat = make_file_stream(spark, ev, tmp_path, time_col="ts")
@@ -63,11 +71,11 @@ def test_stream_distinct_matches_batch(spark, tmp_path, sf_dir):
     exp = sorted(
         rolling_time_distinct(
             ev, x_col="ts", y_col="value", by=["event_type"],
-            duration="6 hours",
+            duration="6 hours", impl="grouped",
         )
         .select(
             "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
             "value",
             "roll_distinct",
         )

@@ -5,6 +5,7 @@ import os
 import shutil
 
 import pytest
+from conftest import timestamp_type
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -52,15 +53,8 @@ def test_stream_minmax_matches_batch(spark, tmp_path, sf_dir, ts_type):
     """Run under both spark.sql.timestampType settings.  The event time
     stays TIMESTAMP_LTZ (watermarks reject NTZ); under TIMESTAMP_NTZ a bare
     "timestamp" cast inside the operator would turn it into NTZ."""
-    prev = spark.conf.get("spark.sql.timestampType", None)
-    spark.conf.set("spark.sql.timestampType", ts_type)
-    try:
+    with timestamp_type(spark, ts_type):
         _stream_vs_batch(spark, tmp_path, sf_dir)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.timestampType")
-        else:
-            spark.conf.set("spark.sql.timestampType", prev)
 
 
 def _stream_vs_batch(spark, tmp_path, sf_dir):

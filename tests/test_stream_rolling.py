@@ -4,7 +4,7 @@ plus the in-span late-row semantics and the frontier guard."""
 
 import pandas as pd
 import pytest
-from conftest import make_file_stream, stage_batches
+from conftest import make_file_stream, stage_batches, timestamp_type
 from pyspark.sql import functions as F
 
 from tsdownsample_spark.operators.rolling import rolling_time_stats
@@ -28,50 +28,119 @@ def _run(spark, tmp_path, stream, name, **kw):
     return spark.table(name).collect()
 
 
-def _key(r):
-    return (r["event_type"], r["ts_us"], r["value"])
-
-
 @pytest.mark.slow
-def test_stream_rolling_matches_batch(spark, tmp_path, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
-    )
-    flat = make_file_stream(spark, ev, tmp_path, time_col="ts")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
-    )
-    got = sorted(
-        _run(spark, tmp_path, stream, "sroll", duration="2 hours", min_obs=5),
-        key=_key,
-    )
-    exp = sorted(
+@pytest.mark.parametrize("ts_type", ["TIMESTAMP_LTZ", "TIMESTAMP_NTZ"])
+def test_stream_rolling_matches_batch(spark, tmp_path, sf_dir, ts_type):
+    """Both twins run operators/rolling.py:_frame_stats, so the stream
+    equals ``impl="grouped"``: exact on count/min/max and every NULL, sums
+    to 1e-12 relative (the kernel centres on the mean of the rows it is
+    given).  Runs under both spark.sql.timestampType settings; the event
+    time stays TIMESTAMP_LTZ (watermarks reject NTZ)."""
+    with timestamp_type(spark, ts_type):
+        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+            "event_type", F.col("ts").cast("timestamp_ltz").alias("ts"), "value"
+        )
+        flat = make_file_stream(spark, ev, tmp_path, time_col="ts")
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(flat)
+        )
+        got = _run(spark, tmp_path, stream, "sroll", duration="2 hours", min_obs=5)
+        exp = _batch(ev, "grouped", duration="2 hours", min_obs=5)
+    _assert_matches(got, exp, rel=1e-12)
+
+
+def _batch(ev, impl, **kw):
+    return (
         rolling_time_stats(
-            ev, x_col="ts", y_col="value", by=["event_type"],
-            duration="2 hours", min_obs=5,
+            ev, x_col="ts", y_col="value", by=["event_type"], impl=impl, **kw
         )
         .select(
             "event_type",
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+            F.unix_micros(F.col("ts").cast("timestamp_ltz")).alias("ts_us"),
             "value", "roll_n", "roll_sum", "roll_mean",
             "roll_min", "roll_max", "roll_std",
         )
-        .collect(),
-        key=_key,
+        .collect()
     )
+
+
+def _assert_matches(got, exp, rel):
+    """Same rows; count/min/max and NULLs exact; sums within ``rel``.
+    Peers sharing a timestamp share a frame, so rows pair up in
+    (key, ts, value) order even when timestamps repeat."""
+    def key(r):
+        return (r["event_type"], r["ts_us"], r["value"] is None, r["value"] or 0.0)
+
+    got, exp = sorted(got, key=key), sorted(exp, key=key)
     assert len(got) == len(exp) > 0
     for gr, er in zip(got, exp):
-        assert _key(gr) == _key(er)
-        assert gr["roll_n"] == er["roll_n"], er
-        # count/min/max are exact; sums re-accumulate in a different order
-        assert gr["roll_min"] == er["roll_min"] and gr["roll_max"] == er["roll_max"]
+        assert key(gr) == key(er), (gr, er)
+        for c in ("roll_n", "roll_min", "roll_max"):
+            assert gr[c] == er[c], (c, er)
         for c in ("roll_sum", "roll_mean", "roll_std"):
             if er[c] is None:
                 assert gr[c] is None, (c, er)
             else:
-                assert gr[c] == pytest.approx(er[c], rel=1e-9, abs=1e-9), (c, er)
+                assert gr[c] == pytest.approx(er[c], rel=rel, abs=0.0), (c, er)
+
+
+def _flat(spark, tmp_path, batches):
+    flat = stage_batches(spark, tmp_path, batches, SCHEMA)
+    return (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(flat)
+    )
+
+
+def _t(s):
+    return (pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)).to_pydatetime()
+
+
+def test_constant_run_exact_zero_std(spark, tmp_path):
+    """A constant frame has std exactly 0 in the stream, as in
+    ``impl="frame"`` and ``"grouped"`` — float prefix sums leave residue
+    there."""
+    lead = [("a", _t(i), v) for i, v in enumerate((3.7, 11.2, 0.4))]
+    run = [("a", _t(10 + i), 0.7) for i in range(40)]
+    batches = [lead + run[:20], run[20:]]
+    got = _run(spark, tmp_path, _flat(spark, tmp_path, batches), "sroll_flat",
+               duration="10 seconds")
+    df = _mk(spark, lead + run)
+    for impl in ("frame", "grouped"):
+        exp = _batch(df, impl, duration="10 seconds")
+        _assert_matches(got, exp, rel=1e-12 if impl == "grouped" else 1e-9)
+        flat_rows = [r for r in exp if r["ts_us"] >= _us(20)]
+        assert len(flat_rows) == 30
+        assert all(r["roll_std"] == 0.0 for r in flat_rows), impl
+    assert all(r["roll_std"] == 0.0 for r in got if r["ts_us"] >= _us(20))
+
+
+def test_nan_payload_reads_as_null(spark, tmp_path):
+    """A NaN payload counts as NULL, as in ``impl="grouped"``: frames
+    without it keep finite sums, in its batch and after it."""
+    batches = [
+        [("a", _t(0), 1.0), ("a", _t(5), float("nan")), ("a", _t(30), 2.0),
+         ("a", _t(80), 3.0)],
+        [("a", _t(90), 4.0), ("a", _t(200), 5.0)],
+    ]
+    got = _run(spark, tmp_path, _flat(spark, tmp_path, batches), "sroll_nan",
+               duration="1 minute")
+    exp = _batch(_mk(spark, [r for b in batches for r in b]), "grouped",
+                 duration="1 minute")
+    _assert_matches(got, exp, rel=1e-12)
+    sums = {r["ts_us"]: r["roll_sum"] for r in got}
+    assert sums[_us(30)] == 3.0  # frame holds the NaN row: read as NULL
+    assert sums[_us(80)] == 5.0 and sums[_us(90)] == 9.0
+    assert sums[_us(200)] == 5.0
+
+
+def _mk(spark, rows):
+    return spark.createDataFrame(rows, SCHEMA)
+
+
+def _us(s):
+    return _EPOCH_US + s * 1_000_000
 
 
 def test_in_span_late_row_scored_and_buffered(spark, tmp_path):

@@ -43,12 +43,15 @@ def rolling_zscore(
     bit) but 10-20x slower than the scan at window=50.  ``"prefix"``
     computes the same trailing mean/std from RUNNING sums of y and y^2
     (cumulative frames are incremental in Spark) minus their lag(window)
-    — O(n) regardless of window, the 100 TB path.  Same NULL/min_obs/
-    flatline semantics (NULL y contributes to neither sum nor count in
-    either impl); values differ only by float-summation order, so scores
-    agree to ~1e-9 relative except when |mean| >> std (catastrophic
-    cancellation in the sum-of-squares variance) — monitoring thresholds
-    don't care, bit-exact parity tests should use "frame".  One more edge:
+    — O(n) regardless of window, the 100 TB path.  Same NULL/min_obs
+    semantics (NULL y contributes to neither sum nor count in either
+    impl); values differ only by float-summation order, so scores agree
+    to ~1e-9 relative except when |mean| >> std (catastrophic
+    cancellation in the sum-of-squares variance).  That residue also
+    means "prefix" has NO exact flatline check: a constant frame can
+    leave a tiny positive std and a huge non-NULL z where "frame" and
+    "grouped" return std 0 and NULL z.  Monitoring thresholds rarely
+    care; parity tests should use "frame" or "grouped".  One more edge:
     a NaN *payload* (not NULL) poisons only its own frames under "frame"
     but every later row of its series under "prefix" (running sums never
     forget) — scrub NaN to NULL upstream when using "prefix".
@@ -115,66 +118,76 @@ def rolling_zscore(
     )
 
 
+def _trailing_zscore(y, window: int, min_obs: int, threshold: float):
+    """Trailing-ROWS z-score of every row of one SORTED series: mean/std
+    of rows ``[i - window, i - 1]`` from extended-precision centered
+    prefix sums, ``z``/``is_anomaly`` gated on ``min_obs`` and a nonzero
+    std.  ``y`` is float64 with NaN for NULL (a NaN payload counts as
+    NULL too).  The one z-score kernel: ``impl="grouped"`` runs it per
+    series and stream_anomaly.py over carried tail + micro-batch.  Count
+    is integer-exact, and constant frames are detected by an exact
+    shifted-rolling min==max comparison so the std>0 gate fires on the
+    same rows as the engines' exact-zero central moments."""
+    import numpy as np
+    import pandas as pd
+
+    n = len(y)
+    valid = ~np.isnan(y)
+    idx = np.arange(n)
+    lo = np.maximum(idx - window, 0)
+    hi = idx  # frame = rows [i - window, i - 1]
+    cnt_p = np.concatenate(([0], np.cumsum(valid)))
+    cnt = (cnt_p[hi] - cnt_p[lo]).astype(np.int64)
+    ym = float(y[valid].mean()) if valid.any() else 0.0
+    yc = np.where(valid, y - ym, 0.0)
+    cs = np.empty(n + 1, dtype=np.longdouble)
+    cs[0] = 0.0
+    np.cumsum(yc, dtype=np.longdouble, out=cs[1:])
+    cq = np.empty(n + 1, dtype=np.longdouble)
+    cq[0] = 0.0
+    np.cumsum(yc * yc, dtype=np.longdouble, out=cq[1:])
+    fs_c = cs[hi] - cs[lo]
+    fq_c = cq[hi] - cq[lo]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = np.asarray(fs_c / cnt, dtype=np.float64) + ym
+        var = np.asarray(
+            np.maximum(fq_c - fs_c * fs_c / np.maximum(cnt, 1), 0.0),
+            dtype=np.float64,
+        ) / np.maximum(cnt - 1, 1)
+        std = np.sqrt(var)
+    # exact flatline detection: trailing min == max (shift by one so
+    # the fixed ROWS window [i-window, i-1] maps onto pandas' own)
+    sh = pd.Series(y).shift(1)
+    roll = sh.rolling(window=window, min_periods=1)
+    std = np.where(roll.min().to_numpy() == roll.max().to_numpy(), 0.0, std)
+    ok = (cnt >= min_obs) & (std > 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        z = np.where(ok, (y - mean) / std, np.nan)
+    flag = pd.array(np.abs(z) > threshold, dtype="boolean")
+    flag[np.isnan(z)] = pd.NA
+    return dict(
+        roll_mean=np.where(cnt > 0, mean, np.nan),
+        roll_std=np.where(cnt > 1, std, np.nan),
+        z=z,
+        is_anomaly=flag,
+    )
+
+
 def _zscore_grouped(
     df: DataFrame, x_col, y_col, by, window, threshold, tiebreak, min_obs
 ) -> DataFrame:
     """impl="grouped": the exact vectorized per-series kernel (guide
-    section 4.2) — one shuffle on the series key, then trailing-ROWS
-    mean/std from extended-precision centered prefix sums instead of
-    Spark's O(n x window) per-row frame re-aggregation (r6: 19 s -> ~2 s
-    at sf1.0).  Identical NULL/min_obs/flatline semantics: the count is
-    integer-exact, mean/std residue sits ~1e-15 (orders under the
-    contract row's 6dp grid), and constant frames are detected by an
-    exact shifted-rolling min==max comparison so the std>0 gate fires on
-    the same rows as the engines' exact-zero central moments."""
+    section 4.2) — one shuffle on the series key, then
+    ``_trailing_zscore`` instead of Spark's O(n x window) per-row frame
+    re-aggregation (r6: 19 s -> ~2 s at sf1.0).  mean/std residue sits
+    ~1e-15 (orders under the contract row's 6dp grid)."""
     import numpy as np
     from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
     def kernel(pdf):
-        import pandas as pd
-
         pdf = pdf.sort_values([x_col, *tiebreak], kind="mergesort")
         y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
-        n = len(y)
-        valid = ~np.isnan(y)
-        idx = np.arange(n)
-        lo = np.maximum(idx - window, 0)
-        hi = idx  # frame = rows [i - window, i - 1]
-        cnt_p = np.concatenate(([0], np.cumsum(valid)))
-        cnt = (cnt_p[hi] - cnt_p[lo]).astype(np.int64)
-        ym = float(y[valid].mean()) if valid.any() else 0.0
-        yc = np.where(valid, y - ym, 0.0)
-        cs = np.empty(n + 1, dtype=np.longdouble)
-        cs[0] = 0.0
-        np.cumsum(yc, dtype=np.longdouble, out=cs[1:])
-        cq = np.empty(n + 1, dtype=np.longdouble)
-        cq[0] = 0.0
-        np.cumsum(yc * yc, dtype=np.longdouble, out=cq[1:])
-        fs_c = cs[hi] - cs[lo]
-        fq_c = cq[hi] - cq[lo]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            mean = np.asarray(fs_c / cnt, dtype=np.float64) + ym
-            var = np.asarray(
-                np.maximum(fq_c - fs_c * fs_c / np.maximum(cnt, 1), 0.0),
-                dtype=np.float64,
-            ) / np.maximum(cnt - 1, 1)
-            std = np.sqrt(var)
-        # exact flatline detection: trailing min == max (shift by one so
-        # the fixed ROWS window [i-window, i-1] maps onto pandas' own)
-        sh = pd.Series(y).shift(1)
-        roll = sh.rolling(window=window, min_periods=1)
-        std = np.where(roll.min().to_numpy() == roll.max().to_numpy(), 0.0, std)
-        ok = (cnt >= min_obs) & (std > 0)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            z = np.where(ok, (y - mean) / std, np.nan)
-        flag = pd.array(np.abs(z) > threshold, dtype="boolean")
-        flag[np.isnan(z)] = pd.NA
-        return pdf.assign(
-            roll_mean=np.where(cnt > 0, mean, np.nan),
-            roll_std=np.where(cnt > 1, std, np.nan),
-            z=z,
-            is_anomaly=flag,
-        )
+        return pdf.assign(**_trailing_zscore(y, window, min_obs, threshold))
 
     schema = StructType(
         list(df.schema.fields)

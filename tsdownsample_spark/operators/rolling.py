@@ -86,7 +86,7 @@ def _range_window(
     integer microseconds for timestamps or the raw value for numeric x."""
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        order = F.unix_micros(F.col(x_col).cast("timestamp"))
+        order = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
         span = duration_to_micros(duration)
     else:
         if not include_current and t_dtype not in (
@@ -189,7 +189,7 @@ def _tuc_expr(df: DataFrame, x_col: str):
     """The integer x axis as a Column (µs for timestamps)."""
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        return F.unix_micros(F.col(x_col).cast("timestamp"))
+        return F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
     return F.col(x_col).cast("long")
 
 
@@ -400,6 +400,52 @@ def _frame_moments_blocked(xs, y, valid, lo, hi, block: int = 64):
     )
 
 
+def _frame_stats(tu, y, span: int, include_current: bool, min_obs: int):
+    """n/sum/mean/min/max/std of every row's trailing RANGE frame over the
+    SORTED integer axis ``tu``; ``y`` is float64 with NaN for NULL (a NaN
+    payload counts as NULL too).  Returns the output columns, NaN where
+    the aggregate is NULL.  The one stats kernel: ``impl="grouped"`` runs
+    it per (series, chunk) group and stream_rolling.py over each
+    micro-batch's merged pool."""
+    import numpy as np
+    import pandas as pd
+
+    lo, hi = _frame_bounds(tu, span, include_current)
+    valid = ~np.isnan(y)
+    cnt = np.concatenate(([0], np.cumsum(valid)))
+    n = (cnt[hi] - cnt[lo]).astype(np.int64)
+    ym = float(y[valid].mean()) if valid.any() else 0.0
+    yc = np.where(valid, y - ym, 0.0)
+    cs, cq = _prefix(yc), _prefix(yc * yc)
+    fsum_c = cs[hi] - cs[lo]
+    fsq_c = cq[hi] - cq[lo]
+    fsum = np.asarray(fsum_c + n * np.longdouble(ym), dtype=np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        mean = fsum / n
+        var = np.asarray(
+            np.maximum(fsq_c - fsum_c * fsum_c / np.maximum(n, 1), 0.0),
+            dtype=np.float64,
+        ) / np.maximum(n - 1, 1)
+        std = np.sqrt(var)
+    roll = pd.Series(y).rolling(_bounds_indexer(lo, hi), min_periods=0)
+    rmin = roll.min().to_numpy()
+    rmax = roll.max().to_numpy()
+    # constant frames: the engines' central-moment aggregation yields
+    # an EXACT 0 std there, while clamped prefix residue would sqrt
+    # to ~1e-5; the frame min==max comparison restores the exact zero
+    std = np.where(rmin == rmax, 0.0, std)
+    gate = n >= min_obs
+    nan = np.nan
+    return dict(
+        roll_n=n,
+        roll_sum=np.where(gate & (n > 0), fsum, nan),
+        roll_mean=np.where(gate & (n > 0), mean, nan),
+        roll_min=np.where(gate, rmin, nan),
+        roll_max=np.where(gate, rmax, nan),
+        roll_std=np.where(gate & (n > 1), std, nan),
+    )
+
+
 def _stats_grouped(
     df: DataFrame, x_col, y_col, by, duration, min_obs, include_current
 ) -> DataFrame:
@@ -409,43 +455,8 @@ def _stats_grouped(
     span = _grouped_span(df, x_col, duration)
 
     def make_cols(pdf, tu):
-        import pandas as pd
-
-        lo, hi = _frame_bounds(tu, span, include_current)
         y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
-        valid = ~np.isnan(y)
-        cnt = np.concatenate(([0], np.cumsum(valid)))
-        n = (cnt[hi] - cnt[lo]).astype(np.int64)
-        ym = float(y[valid].mean()) if valid.any() else 0.0
-        yc = np.where(valid, y - ym, 0.0)
-        cs, cq = _prefix(yc), _prefix(yc * yc)
-        fsum_c = cs[hi] - cs[lo]
-        fsq_c = cq[hi] - cq[lo]
-        fsum = np.asarray(fsum_c + n * np.longdouble(ym), dtype=np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            mean = fsum / n
-            var = np.asarray(
-                np.maximum(fsq_c - fsum_c * fsum_c / np.maximum(n, 1), 0.0),
-                dtype=np.float64,
-            ) / np.maximum(n - 1, 1)
-            std = np.sqrt(var)
-        roll = pd.Series(y).rolling(_bounds_indexer(lo, hi), min_periods=0)
-        rmin = roll.min().to_numpy()
-        rmax = roll.max().to_numpy()
-        # constant frames: the engines' central-moment aggregation yields
-        # an EXACT 0 std there, while clamped prefix residue would sqrt
-        # to ~1e-5; the frame min==max comparison restores the exact zero
-        std = np.where(rmin == rmax, 0.0, std)
-        gate = n >= min_obs
-        nan = np.nan
-        return dict(
-            roll_n=n,
-            roll_sum=np.where(gate & (n > 0), fsum, nan),
-            roll_mean=np.where(gate & (n > 0), mean, nan),
-            roll_min=np.where(gate, rmin, nan),
-            roll_max=np.where(gate, rmax, nan),
-            roll_std=np.where(gate & (n > 1), std, nan),
-        )
+        return _frame_stats(tu, y, span, include_current, min_obs)
 
     return _grouped_apply(
         df, x_col, by, span, make_cols,
@@ -491,10 +502,38 @@ def _quantile_grouped(
     )
 
 
+def _frame_distinct(tu, codes, span: int):
+    """Distinct non-NULL values in every row's peer-inclusive trailing
+    ``[t - span, t]`` frame over the SORTED integer axis ``tu``; ``codes``
+    are ``pd.factorize`` codes (-1 = NULL).  The one distinct kernel:
+    ``impl="grouped"`` and stream_distinct.py both call it."""
+    import numpy as np
+
+    valid = codes >= 0
+    vt, vc = tu[valid], codes[valid]
+    order = np.lexsort((vt, vc))
+    ct, tt = vc[order], vt[order]
+    # a value is counted in the frame ending at t iff its LATEST
+    # occurrence at-or-before t is >= t - span; occurrence i is that
+    # latest one for t in [tt_i, next-same-value), so it contributes
+    # +1 on [tt_i, min(next_i, tt_i + span + 1)) of the integer axis
+    big = np.int64(2**62)
+    nxt = np.full(len(tt), big, dtype=np.int64)
+    if len(tt) > 1:
+        same = ct[:-1] == ct[1:]
+        nxt[:-1][same] = tt[1:][same]
+    ends = np.minimum(nxt, tt + span + 1)
+    starts = np.sort(tt)
+    ends = np.sort(ends)
+    return (
+        np.searchsorted(starts, tu, side="right")
+        - np.searchsorted(ends, tu, side="right")
+    ).astype(np.int64)
+
+
 def _distinct_grouped(
     df: DataFrame, x_col, y_col, by, duration, include_current
 ) -> DataFrame:
-    import numpy as np
     from pyspark.sql.types import LongType, StructField
 
     span = _grouped_span(df, x_col, duration)
@@ -505,27 +544,7 @@ def _distinct_grouped(
         import pandas as pd
 
         codes = pd.factorize(pdf[y_col], use_na_sentinel=True)[0]
-        valid = codes >= 0
-        vt, vc = tu[valid], codes[valid]
-        order = np.lexsort((vt, vc))
-        ct, tt = vc[order], vt[order]
-        # a value is counted in the frame ending at t iff its LATEST
-        # occurrence at-or-before t is >= t - span; occurrence i is that
-        # latest one for t in [tt_i, next-same-value), so it contributes
-        # +1 on [tt_i, min(next_i, tt_i + span + 1)) of the integer axis
-        big = np.int64(2**62)
-        nxt = np.full(len(tt), big, dtype=np.int64)
-        if len(tt) > 1:
-            same = ct[:-1] == ct[1:]
-            nxt[:-1][same] = tt[1:][same]
-        ends = np.minimum(nxt, tt + span + 1)
-        starts = np.sort(tt)
-        ends = np.sort(ends)
-        roll = (
-            np.searchsorted(starts, tu, side="right")
-            - np.searchsorted(ends, tu, side="right")
-        ).astype(np.int64)
-        return dict(roll_distinct=roll)
+        return dict(roll_distinct=_frame_distinct(tu, codes, span))
 
     return _grouped_apply(
         df, x_col, by, span, make_cols,
@@ -667,7 +686,7 @@ def rolling_time_stats(
     if impl == "prefix":
         t_dtype = dict(df.dtypes)[x_col]
         if t_dtype.startswith("timestamp"):
-            order = F.unix_micros(F.col(x_col).cast("timestamp"))
+            order = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
             span = duration_to_micros(duration)
         elif t_dtype in ("tinyint", "smallint", "int", "bigint"):
             order = F.col(x_col).cast("long")
@@ -864,7 +883,7 @@ def rolling_time_regr(
     w = _range_window(df, x_col, by, duration, include_current)
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        tu = F.unix_micros(F.col(x_col).cast("timestamp"))
+        tu = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
     else:
         tu = F.col(x_col).cast("double")
     wp = Window.partitionBy(*by)

@@ -26,8 +26,8 @@ Spark-first notes (100 TB shapes):
   (``y'_t = a*y_t + (1-a)*y'_{t-1}`` carries state point to point, like
   LTTB's selected-point dependence): whole-series groups through
   ``applyInPandas``, parallel ACROSS series — the documented escape hatch,
-  not a regression to per-row Python (Arrow batches, vectorized pandas
-  ewm inside).
+  not a regression to per-row Python (Arrow batches, one loop over each
+  series' NumPy array, ``_ewma_scan``, which the stream twin also runs).
 * ``seasonal_zscore`` — per-(series, hour-of-day) baseline profile via one
   groupBy, joined back (AQE broadcasts the 24x-series-count profile), each
   point scored against its OWN season — the diurnal-pattern-aware variant
@@ -189,7 +189,7 @@ def ewma(
 
     Sequential by definition — each smoothed value feeds the next — so it
     runs whole-series-per-group through ``applyInPandas`` (the LTTB
-    pattern: parallel across series, vectorized pandas ``ewm`` within).
+    pattern: parallel across series, one loop over the series' array).
     A window/closed-form rewrite exists on paper (weighted prefix sums)
     but needs ``(1-alpha)^-t`` factors that overflow float64 within a few
     thousand points, so the honest distributed shape is one group per
@@ -218,26 +218,35 @@ def ewma(
     sort_cols = [x_col] + tiebreak
 
     a = float(alpha)
-    one_minus_a = 1.0 - a
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
         pdf = pdf.sort_values(sort_cols, kind="mergesort", ignore_index=True)
         v = pdf[y_col].to_numpy(dtype="float64")
-        sm = np.empty_like(v)
-        ew = np.nan
-        for i, x in enumerate(v):
-            if np.isnan(x):
-                sm[i] = ew  # NULL/NaN inherits the running smooth
-            else:
-                ew = x if np.isnan(ew) else a * x + one_minus_a * ew
-                sm[i] = ew
         out = pdf[by + [x_col, y_col]].copy()
-        out["ewma"] = sm
+        out["ewma"] = _ewma_scan(v, a, float("nan"))
         return out
 
     return df.select(*cols).groupBy(*by).applyInPandas(fn, schema=schema)
+
+
+def _ewma_scan(v, alpha: float, ew0: float):
+    """The EWMA recursion over one sorted series, seeded with the running
+    smooth ``ew0`` (NaN = no observation yet).  NULL/NaN rows inherit the
+    running smooth.  The one EWMA loop: ``ewma`` seeds it with NaN per
+    series and stream_ewma.py with its carried scalar, so the running
+    smooth after the scan is the output's last element."""
+    import numpy as np
+
+    one_minus_a = 1.0 - alpha
+    sm = np.empty_like(v)
+    ew = ew0
+    for i, x in enumerate(v):
+        if np.isnan(x):
+            sm[i] = ew  # NULL/NaN inherits the running smooth
+        else:
+            ew = x if np.isnan(ew) else alpha * x + one_minus_a * ew
+            sm[i] = ew
+    return sm
 
 
 def trend(

@@ -2492,12 +2492,14 @@ def q_stream_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same 2-hour RANGE frame directly in SQL: a hash
     match proves stream == batch == independent engine.  Slices cut on
     strict ts predicates, so same-timestamp peers can never be split
-    across batches (peer-inclusive frames stay deterministic).  Rounding:
-    sum at 2dp (on the 0.01 input grid — residue-stripping); std at 4dp,
-    NOT q_rolling_time's 6 — the stream derives variance from cumsum
-    prefix differences while the oracle aggregates the frame directly, so
-    the engines differ by the identity's cancellation slack, exactly the
-    q_rolling_prefix / q_anomaly_prefix situation."""
+    across batches (peer-inclusive frames stay deterministic).  Each
+    micro-batch runs the batch ``impl="grouped"`` kernel
+    (operators/rolling.py ``_frame_stats``: extended-precision centred
+    prefix sums, exact zero std on constant frames) over the carried pool,
+    so its residue against the oracle's direct frame aggregation is
+    ~1e-15.  Rounding: sum at 2dp (on the 0.01 input grid —
+    residue-stripping); std at 4dp, coarser than q_rolling_time's 6,
+    which a float64 prefix-difference form of this twin needed."""
     import tempfile
 
     from tsdownsample_spark.plans.shipping import ship_package
@@ -2679,11 +2681,11 @@ def q_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING trailing-window distinct count
     (streaming/stream_distinct.py): rolling 24-hour distinct active users
     per event type over the same three time-slice micro-batches as
-    q_stream_rolling, computed by the Fenwick last-occurrence sweep over
-    the carried in-span pool.  The oracle is DuckDB's
+    q_stream_rolling, computed by the batch ``impl="grouped"`` kernel
+    (operators/rolling.py ``_frame_distinct``, a last-occurrence interval
+    count) over the carried in-span pool.  The oracle is DuckDB's
     COUNT(DISTINCT) OVER a RANGE frame — exact integers, a hash match
-    proves stream == batch == independent engine for an algorithm that
-    shares NO code with either window implementation."""
+    proves stream == batch == independent engine."""
     import tempfile
 
     from tsdownsample_spark.plans.shipping import ship_package

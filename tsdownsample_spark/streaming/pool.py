@@ -1,8 +1,15 @@
 """Shared stateful scaffold for trailing-time-window streaming twins
 (stream_rolling.py, stream_distinct.py): per-key state is the recent
-(ts, value) observations, each micro-batch pools them with its own rows,
-and every arriving row's frame ``[t - span, t]`` becomes a ``[lo, hi)``
-slice of the pooled, time-sorted arrays.
+(ts, value) observations, and each micro-batch merges them with its own
+rows.  The twin then runs the BATCH frame kernel of
+operators/rolling.py over the merged rows and keeps the outputs at the
+batch rows' positions — stream equals batch because both run the same
+code.  (The kernel runs over every merged row, not just the batch rows:
+its pandas window indexer needs one bound per row.)
+
+NULL rule: a NULL value and a NaN payload are the same thing here, as in
+the batch ``impl="grouped"`` kernels — scored like any row, inert in
+every frame, never carried in state.
 
 Retention horizon is **2 x span**, which is what makes the late-data
 guarantee true (and not merely approximate): a row scored while within
@@ -33,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-__all__ = ["POOL_STATE_SCHEMA", "pooled_frames", "prep_stream"]
+__all__ = ["POOL_STATE_SCHEMA", "pooled_frames", "prep_stream", "sorted_batch"]
 
 POOL_STATE_SCHEMA = StructType(
     [
@@ -44,16 +51,23 @@ POOL_STATE_SCHEMA = StructType(
 )
 
 
-def pooled_frames(state, pdfs: Iterator[pd.DataFrame], y_col: str, span: int):
-    """Load carried state, pool it with this batch, compute every row's
-    ``[lo, hi)`` frame slice, and persist the trimmed pool.
+def sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
+    """One micro-batch group as a single frame, stably sorted by ``ts_us``."""
+    chunks = list(pdfs)
+    pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    return pdf.sort_values("ts_us", kind="mergesort", ignore_index=True)
 
-    Returns ``(pdf, ts, vals, isnull, pool_ts, pool_vals, lo, hi)`` where
-    ``pdf`` is the batch sorted by ``ts_us``; ``vals`` has NULL lanes
-    masked to 0.0 (``isnull`` marks them); ``pool_ts``/``pool_vals`` are
-    the time-sorted non-null observation pool (carry + batch); and
-    ``lo``/``hi`` index the peer-inclusive ``[t - span, t]`` frame of each
-    batch row within the pool (both non-decreasing).
+
+def pooled_frames(state, pdfs: Iterator[pd.DataFrame], y_col: str, span: int):
+    """Load carried state, merge it with this batch, and persist the
+    trimmed pool.
+
+    Returns ``(pdf, mt, my, pos)``: ``pdf`` is the batch sorted by
+    ``ts_us``; ``mt``/``my`` are the merged rows — the carried
+    observations plus every batch row, NULL values as NaN, sorted by
+    ``ts_us``; ``pos`` indexes ``pdf``'s rows within them.  A trailing
+    ``[t - span, t]`` kernel run over the merged rows sees each batch
+    row's frame over every observation that has arrived.
     """
     import numpy as np
 
@@ -65,44 +79,36 @@ def pooled_frames(state, pdfs: Iterator[pd.DataFrame], y_col: str, span: int):
         last_ts = None
         carry_t = np.empty(0, dtype=np.int64)
         carry_v = np.empty(0, dtype=np.float64)
-    chunks = list(pdfs)
-    pdf = (
-        pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    ).sort_values("ts_us", kind="mergesort", ignore_index=True)
+    pdf = sorted_batch(pdfs)
     ts = pdf["ts_us"].to_numpy(dtype="int64")
-    isnull = pdf["_isnull"].to_numpy(dtype=bool)
-    vals = pdf[y_col].astype("float64").to_numpy()
-    vals = np.where(isnull, 0.0, vals)  # masked lanes must stay finite
+    y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
 
-    # pool = carried in-horizon buffer + this batch's non-null rows,
-    # time-sorted (each side sorted -> one mergesort of the concat)
-    bt, bv = ts[~isnull], vals[~isnull]
-    ct = np.concatenate([carry_t, bt])
-    cv = np.concatenate([carry_v, bv])
-    order = np.argsort(ct, kind="mergesort")
-    ct, cv = ct[order], cv[order]
-
-    # frame of a row at time t = pool indices with ts in [t - span, t],
-    # peer-inclusive on both ends like the batch RANGE frame
-    lo = np.searchsorted(ct, ts - span, side="left")
-    hi = np.searchsorted(ct, ts, side="right")
+    # each side is sorted -> one stable mergesort of the concat
+    mt = np.concatenate([carry_t, ts])
+    my = np.concatenate([carry_v, y])
+    order = np.argsort(mt, kind="mergesort")
+    mt, my = mt[order], my[order]
+    rank = np.empty_like(order)
+    rank[order] = np.arange(len(order))
+    pos = rank[len(carry_t):]
 
     # frontier never regresses; retention keeps 2 x span below it (the
     # module docstring's completeness guarantee for in-span late rows)
     new_last = int(ts[-1]) if last_ts is None else max(int(ts[-1]), int(last_ts))
-    keep = ct >= new_last - 2 * span
+    keep = (mt >= new_last - 2 * span) & ~np.isnan(my)
     state.update(
-        (new_last, [int(x) for x in ct[keep]], [float(x) for x in cv[keep]])
+        (new_last, [int(x) for x in mt[keep]], [float(x) for x in my[keep]])
     )
-    return pdf, ts, vals, isnull, ct, cv, lo, hi
+    return pdf, mt, my, pos
 
 
 def prep_stream(stream_df, x_col: str, y_col: str, by):
     """The shared pre-projection: key columns + integer-microsecond time +
-    double-cast value + its NULL mask, NULL timestamps dropped."""
+    double-cast value, NULL timestamps dropped.  The LTZ cast keeps
+    ``unix_micros`` valid in ``spark.sql.timestampType=TIMESTAMP_NTZ``
+    sessions, where a bare TIMESTAMP cast means NTZ."""
     return stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
         *by,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
+        f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us",
         f"CAST({y_col} AS DOUBLE) AS {y_col}",
-        f"({y_col} IS NULL) AS _isnull",
     )

@@ -9,14 +9,19 @@ in the previous batch.  State per key is the last ``window`` observations
 any series cardinality streams through the state store; window=50 is
 400 bytes/series.
 
-Semantics match the batch operator's ``impl="prefix"`` path (see
-operators/anomaly.py): trailing mean/std from sums of y and y^2 over the
-previous ``window`` rows, NULL y occupying a frame position but feeding
-neither sum nor count, NULL z until ``min_obs`` prior observations exist
-or when the trailing std is zero.  Values agree with the batch operator to
-float-summation-order tolerance (~1e-9 relative), not bit-for-bit — the
-stream re-sums each frame from the carried tail while batch subtracts
-running prefix sums; the equivalence pytest compares at that tolerance.
+Each micro-batch runs the batch kernel, operators/anomaly.py
+``_trailing_zscore`` (what ``impl="grouped"`` runs), over the carried
+tail plus the batch and keeps the batch's rows, so the semantics are the
+batch operator's: trailing mean/std over the previous ``window`` rows,
+NULL y occupying a frame position but feeding neither sum nor count, a
+NaN payload treated as NULL, NULL z until ``min_obs`` prior observations
+exist or when the trailing frame is constant (exact min==max check).
+Values match ``impl="grouped"`` closely, not bit-for-bit: the kernel
+centres its prefix sums on the mean of the rows it is given, and the
+stream sees tail + batch, not the whole series.  mean agrees to ~1e-12
+relative; std moves by up to ~1e-12 of the data's magnitude (relatively
+more where a frame's spread is tiny against its level), z by that
+propagated; the NULL masks and ``is_anomaly`` agree exactly.
 
 Late-data caveat (same as every stateful op here): a row older than the
 carried frontier scores against the newer tail, not its true in-order
@@ -40,6 +45,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from tsdownsample_spark.operators.anomaly import _trailing_zscore
+from tsdownsample_spark.streaming.pool import prep_stream, sorted_batch
 
 __all__ = ["stream_rolling_zscore"]
 
@@ -94,68 +102,35 @@ def stream_rolling_zscore(
 
         if state.exists:
             last_ts, tail_vals, tail_null = state.get
-            carry_v = np.asarray(tail_vals, dtype=np.float64)
-            carry_m = np.asarray(tail_null, dtype=bool)
+            carry = np.asarray(tail_vals, dtype=np.float64)
+            carry[np.asarray(tail_null, dtype=bool)] = np.nan
         else:
             last_ts = None
-            carry_v = np.empty(0, dtype=np.float64)
-            carry_m = np.empty(0, dtype=bool)
-        chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        ).sort_values("ts_us", kind="mergesort", ignore_index=True)
+            carry = np.empty(0, dtype=np.float64)
+        pdf = sorted_batch(pdfs)
         ts = pdf["ts_us"].to_numpy(dtype="int64")
-        isnull = pdf["_isnull"].to_numpy(dtype=bool)
-        vals = pdf[y_col].astype("float64").to_numpy()
-        vals = np.where(isnull, 0.0, vals)  # masked lanes must stay finite
-        k = len(carry_v)
-        v = np.concatenate([carry_v, vals])
-        m = np.concatenate([carry_m, isnull])
-        ok = np.where(m, 0.0, v)
-        # prefix sums over carry+batch; frame of global row j = [j-window, j)
-        s1 = np.concatenate([[0.0], np.cumsum(ok)])
-        s2 = np.concatenate([[0.0], np.cumsum(ok * ok)])
-        c = np.concatenate([[0], np.cumsum(~m)])
-        j = np.arange(k, len(v))
-        lo = np.maximum(j - window, 0)
-        fs1 = s1[j] - s1[lo]
-        fs2 = s2[j] - s2[lo]
-        cnt = c[j] - c[lo]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = fs1 / cnt
-            var = (fs2 - fs1 * fs1 / np.where(cnt > 0, cnt, 1)) / np.where(
-                cnt > 1, cnt - 1, 1
-            )
-            std = np.sqrt(np.maximum(var, 0.0))
-            z = (v[j] - mean) / std
-        mean_null = cnt < 1
-        std_null = cnt < 2
-        z_null = (cnt < min_obs) | std_null | ~(std > 0) | m[j]
+        y = pdf[y_col].to_numpy(dtype=np.float64, na_value=np.nan)
+        v = np.concatenate([carry, y])
+        cols = _trailing_zscore(v, window, min_obs, threshold)
         # frontier guard: an entirely-late batch leaves state untouched
         if last_ts is None or int(ts[-1]) >= int(last_ts):
-            nv = v[-window:]
-            nm = m[-window:]
+            tail = v[-window:]
+            isnull = np.isnan(tail)
             new_last = int(ts[-1]) if last_ts is None else max(int(ts[-1]), int(last_ts))
-            state.update((new_last, [float(x) for x in nv], [bool(x) for x in nm]))
+            state.update((
+                new_last,
+                [float(x) for x in np.where(isnull, 0.0, tail)],
+                [bool(x) for x in isnull],
+            ))
         out = pd.DataFrame({col: pdf[col] for col in by})
         out["ts_us"] = pdf["ts_us"]
-        out[y_col] = pd.arrays.FloatingArray(vals, isnull)
-        out["roll_mean"] = pd.arrays.FloatingArray(mean, mean_null)
-        out["roll_std"] = pd.arrays.FloatingArray(std, std_null)
-        out["z"] = pd.arrays.FloatingArray(z, z_null)
-        flag = np.abs(z) > threshold
-        out["is_anomaly"] = pd.arrays.BooleanArray(
-            np.where(z_null, False, flag), z_null
-        )
+        out[y_col] = pdf[y_col]
+        k = len(carry)
+        for name, c in cols.items():
+            out[name] = c[k:]
         yield out
 
-    prepped = stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
-        *by,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
-        f"CAST({y_col} AS DOUBLE) AS {y_col}",
-        f"({y_col} IS NULL) AS _isnull",
-    )
-    return prepped.groupBy(*by).applyInPandasWithState(
+    return prep_stream(stream_df, x_col, y_col, by).groupBy(*by).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,

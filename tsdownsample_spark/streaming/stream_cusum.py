@@ -117,7 +117,7 @@ def stream_cusum(
         .join(stats_df, on=by, how="inner")
         .selectExpr(
             *by,
-            f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
+            f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us",
             f"CAST({y_col} AS DOUBLE) AS {y_col}",
             "CAST(_mu AS DOUBLE) AS _mu",
             "CAST(_sd AS DOUBLE) AS _sd",

@@ -7,17 +7,10 @@ State/pooling/late-data semantics live in streaming/pool.py (shared with
 stream_rolling.py): 2 x ``duration`` retention means every row scored
 while within ``duration`` of the frontier sees its complete frame.
 
-Algorithm (exact, O((m + q) log m) per batch where m = pool size and
-q = new rows): the classic offline last-occurrence sweep.  Pool
-observations sorted by time; sweep a right cursor over them, maintaining a
-Fenwick tree where position p holds 1 iff the value at p has no LATER
-occurrence seen so far (the value's current last occurrence).  For each
-query row (right endpoints non-decreasing because the batch is
-time-sorted), first advance the sweep to its frame end, then
-``distinct = BIT.sum(lo, hi)`` — inside any frame, counting
-last-occurrences counts each distinct value exactly once.  The tree is
-rebuilt per batch over the pooled window (cheap: the pool is
-horizon-bounded); only the raw observations persist in state.
+Each micro-batch runs the batch kernel, operators/rolling.py
+``_frame_distinct`` (what ``impl="grouped"`` runs), over the merged pool:
+exact integer counts, O(m log m) per batch for a pool of m rows.  NULL
+values and NaN payloads are scored but never counted.
 """
 
 from __future__ import annotations
@@ -29,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from tsdownsample_spark.operators.rolling import duration_to_micros
+from tsdownsample_spark.operators.rolling import _frame_distinct, duration_to_micros
 from tsdownsample_spark.streaming.pool import (
     POOL_STATE_SCHEMA,
     pooled_frames,
@@ -37,46 +30,6 @@ from tsdownsample_spark.streaming.pool import (
 )
 
 __all__ = ["stream_rolling_time_distinct"]
-
-
-def _sliding_distinct(ts, vals, q_lo, q_hi):
-    """distinct(vals[q_lo[i]:q_hi[i]]) for non-decreasing q_hi via the
-    last-occurrence Fenwick sweep.  ``ts`` sorted ascending."""
-    import numpy as np
-
-    m = len(ts)
-    out = np.zeros(len(q_lo), dtype=np.int64)
-    if m == 0:
-        return out
-    bit = np.zeros(m + 1, dtype=np.int64)
-
-    def bit_add(i, d):
-        i += 1
-        while i <= m:
-            bit[i] += d
-            i += i & (-i)
-
-    def bit_sum(i):  # prefix sum of [0, i)
-        s = 0
-        while i > 0:
-            s += bit[i]
-            i -= i & (-i)
-        return s
-
-    last_pos: dict = {}
-    swept = 0
-    for qi in range(len(q_lo)):
-        hi = q_hi[qi]
-        while swept < hi:
-            v = vals[swept]
-            p = last_pos.get(v)
-            if p is not None:
-                bit_add(p, -1)
-            bit_add(swept, 1)
-            last_pos[v] = swept
-            swept += 1
-        out[qi] = bit_sum(hi) - bit_sum(q_lo[qi])
-    return out
 
 
 def stream_rolling_time_distinct(
@@ -111,14 +64,12 @@ def stream_rolling_time_distinct(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        pdf, ts, vals, isnull, ct, cv, lo, hi = pooled_frames(
-            state, pdfs, y_col, span
-        )
-        dn = _sliding_distinct(ct, cv, lo, hi)
+        pdf, mt, my, pos = pooled_frames(state, pdfs, y_col, span)
+        codes = pd.factorize(my, use_na_sentinel=True)[0]
         out = pd.DataFrame({col: pdf[col] for col in by})
         out["ts_us"] = pdf["ts_us"]
-        out[y_col] = pd.arrays.FloatingArray(vals, isnull)
-        out["roll_distinct"] = dn
+        out[y_col] = pdf[y_col]
+        out["roll_distinct"] = _frame_distinct(mt, codes, span)[pos]
         yield out
 
     return prep_stream(stream_df, x_col, y_col, by).groupBy(*by).applyInPandasWithState(

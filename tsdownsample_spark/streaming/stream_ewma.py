@@ -4,12 +4,12 @@
 series across micro-batches — the smallest state of any stateful operator
 here (the batch operator needs whole-series groups only because a batch
 has no carry; the stream is where the recursion's shape is natural).
-The recursion is spelled exactly like the batch operator's loop
-(``alpha*y + (1-alpha)*prev``), so stream==batch holds bit-for-bit on
-in-order data, not just to tolerance.
+Each micro-batch runs the batch operator's own loop,
+operators/stats.py ``_ewma_scan``, seeded with the carried smooth, so
+stream==batch holds bit-for-bit on in-order data, not just to tolerance.
 
-NULL ``y`` matches batch: the row inherits the running smooth and leaves
-state untouched.
+NULL ``y`` (or a NaN payload) matches batch: the row inherits the running
+smooth and leaves state untouched.
 
 Late-data caveat (same as every stateful op here): late rows fold into
 the smooth at arrival order; an ENTIRELY-late micro-batch leaves the
@@ -26,6 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from tsdownsample_spark.operators.stats import _ewma_scan
+from tsdownsample_spark.streaming.pool import prep_stream, sorted_batch
+
 __all__ = ["stream_ewma"]
 
 
@@ -41,7 +44,6 @@ def stream_ewma(
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     by = list(by)
     a = float(alpha)
-    one_minus_a = 1.0 - a
     key_fields = [stream_df.schema[c] for c in by]
     out_schema = StructType(
         key_fields
@@ -67,35 +69,21 @@ def stream_ewma(
             ew = float("nan") if ew0 is None else float(ew0)
         else:
             last_ts, ew = None, float("nan")
-        chunks = list(pdfs)
-        pdf = (
-            pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        ).sort_values("ts_us", kind="mergesort", ignore_index=True)
+        pdf = sorted_batch(pdfs)
         ts = pdf["ts_us"].to_numpy(dtype="int64")
-        v = pdf[y_col].to_numpy(dtype="float64")  # NULL -> NaN
-        sm = np.empty_like(v)
-        for i, x in enumerate(v):
-            if np.isnan(x):
-                sm[i] = ew  # NULL inherits the running smooth
-            else:
-                ew = x if np.isnan(ew) else a * x + one_minus_a * ew
-                sm[i] = ew
+        sm = _ewma_scan(pdf[y_col].to_numpy(dtype="float64"), a, ew)
+        ew = float(sm[-1])
         # frontier guard: an entirely-late batch leaves state untouched
         if last_ts is None or int(ts[-1]) >= int(last_ts):
             new_last = int(ts[-1]) if last_ts is None else max(int(ts[-1]), int(last_ts))
-            state.update((new_last, None if np.isnan(ew) else float(ew)))
+            state.update((new_last, None if np.isnan(ew) else ew))
         out = pd.DataFrame({col: pdf[col] for col in by})
         out["ts_us"] = pdf["ts_us"]
         out[y_col] = pdf[y_col]
         out["ewma"] = sm
         yield out
 
-    prepped = stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
-        *by,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
-        f"CAST({y_col} AS DOUBLE) AS {y_col}",
-    )
-    return prepped.groupBy(*by).applyInPandasWithState(
+    return prep_stream(stream_df, x_col, y_col, by).groupBy(*by).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,

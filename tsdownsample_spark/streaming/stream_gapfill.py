@@ -112,7 +112,7 @@ def stream_locf(
 
     prepped = stream_df.selectExpr(
         *by,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
+        f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us",
         f"CAST({y_col} AS DOUBLE) AS {y_col}",
         f"({y_col} IS NULL) AS _isnull",
     )

@@ -77,7 +77,7 @@ def stream_detect_gaps(
         yield out
 
     prepped = stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
-        *by, f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us"
+        *by, f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us"
     )
     return prepped.groupBy(*by).applyInPandasWithState(
         fn,

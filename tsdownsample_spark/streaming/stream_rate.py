@@ -139,7 +139,7 @@ def stream_counter_rate(
 
     prepped = stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
         *by,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
+        f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us",
         f"CAST({y_col} AS DOUBLE) AS {y_col}",
         f"({y_col} IS NULL) AS _isnull",
     )

@@ -11,17 +11,20 @@ frame over all arrived observations; only rows older than
 ``frontier - duration`` can be under-filled.  The frontier never
 regresses.
 
-Semantics match the batch operator: peer-inclusive ``[t - duration, t]``
-frame (duplicate timestamps land together), ``min_obs`` gating every
-aggregate except ``roll_n``, NULL ``y`` scored but inert.  Sums agree
-with the batch window to float-summation-order tolerance (~1e-9
-relative) — the stream re-sums each frame from prefix arrays while the
-JVM window accumulates in frame order; count/min/max are exact.
+Each micro-batch runs the batch kernel, operators/rolling.py
+``_frame_stats`` (what ``impl="grouped"`` runs), over the merged pool, so
+the semantics are the batch operator's: peer-inclusive
+``[t - duration, t]`` frame (duplicate timestamps land together),
+``min_obs`` gating every aggregate except ``roll_n``, NULL ``y`` scored
+but inert, and a NaN payload treated as NULL.  count/min/max are exact
+and a constant frame has std exactly 0.  Sums, means and stds match
+``impl="grouped"`` to ~1e-12 relative, not bit-for-bit: the kernel
+centres its prefix sums on the mean of the rows it is given, and the
+stream's pool is not the batch's chunk (tests/test_stream_kernels.py).
 """
 
 from __future__ import annotations
 
-from collections import deque
 from typing import Any, Iterator, Sequence, Tuple
 
 import pandas as pd
@@ -29,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from tsdownsample_spark.operators.rolling import duration_to_micros
+from tsdownsample_spark.operators.rolling import _frame_stats, duration_to_micros
 from tsdownsample_spark.streaming.pool import (
     POOL_STATE_SCHEMA,
     pooled_frames,
@@ -37,40 +40,6 @@ from tsdownsample_spark.streaming.pool import (
 )
 
 __all__ = ["stream_rolling_time_stats"]
-
-
-def _slide_min_max(vals, lo, hi):
-    """Min and max of ``vals[lo[i]:hi[i]]`` for non-decreasing lo/hi —
-    monotonic-deque sliding extremes, O(n) total.  NaN where the frame
-    is empty."""
-    import numpy as np
-
-    n = len(lo)
-    mn = np.full(n, np.nan)
-    mx = np.full(n, np.nan)
-    dq_min: deque = deque()
-    dq_max: deque = deque()
-    j_min = j_max = 0
-    for i in range(n):
-        while j_min < hi[i]:
-            while dq_min and vals[dq_min[-1]] >= vals[j_min]:
-                dq_min.pop()
-            dq_min.append(j_min)
-            j_min += 1
-        while dq_min and dq_min[0] < lo[i]:
-            dq_min.popleft()
-        if dq_min:
-            mn[i] = vals[dq_min[0]]
-        while j_max < hi[i]:
-            while dq_max and vals[dq_max[-1]] <= vals[j_max]:
-                dq_max.pop()
-            dq_max.append(j_max)
-            j_max += 1
-        while dq_max and dq_max[0] < lo[i]:
-            dq_max.popleft()
-        if dq_max:
-            mx[i] = vals[dq_max[0]]
-    return mn, mx
 
 
 def stream_rolling_time_stats(
@@ -111,34 +80,13 @@ def stream_rolling_time_stats(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        pdf, ts, vals, isnull, ct, cv, lo, hi = pooled_frames(
-            state, pdfs, y_col, span
-        )
-        s1 = np.concatenate([[0.0], np.cumsum(cv)])
-        s2 = np.concatenate([[0.0], np.cumsum(cv * cv)])
-        n = (hi - lo).astype(np.int64)
-        fs1 = s1[hi] - s1[lo]
-        fs2 = s2[hi] - s2[lo]
-        mn, mx = _slide_min_max(cv, lo, hi)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            mean = fs1 / np.where(n > 0, n, 1)
-            var = (fs2 - fs1 * fs1 / np.where(n > 0, n, 1)) / np.where(
-                n > 1, n - 1, 1
-            )
-            std = np.sqrt(np.maximum(var, 0.0))
-        gated = n < min_obs
-        std_null = gated | (n < 2)
+        pdf, mt, my, pos = pooled_frames(state, pdfs, y_col, span)
+        cols = _frame_stats(mt, my, span, True, min_obs)
         out = pd.DataFrame({col: pdf[col] for col in by})
         out["ts_us"] = pdf["ts_us"]
-        out[y_col] = pd.arrays.FloatingArray(vals, isnull)
-        out["roll_n"] = n
-        out["roll_sum"] = pd.arrays.FloatingArray(fs1, gated)
-        out["roll_mean"] = pd.arrays.FloatingArray(mean, gated)
-        out["roll_min"] = pd.arrays.FloatingArray(mn, gated | (n < 1))
-        out["roll_max"] = pd.arrays.FloatingArray(mx, gated | (n < 1))
-        out["roll_std"] = pd.arrays.FloatingArray(std, std_null)
+        out[y_col] = pdf[y_col]
+        for name, v in cols.items():
+            out[name] = v[pos]
         yield out
 
     return prep_stream(stream_df, x_col, y_col, by).groupBy(*by).applyInPandasWithState(

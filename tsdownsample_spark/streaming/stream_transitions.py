@@ -102,7 +102,7 @@ def stream_transitions(
     tb_expr = f"CAST({tiebreak} AS BIGINT)" if tiebreak else "CAST(0 AS BIGINT)"
     prepped = stream_df.where(f"{x_col} IS NOT NULL").selectExpr(
         user_col,
-        f"unix_micros(CAST({x_col} AS TIMESTAMP)) AS ts_us",
+        f"unix_micros(CAST({x_col} AS TIMESTAMP_LTZ)) AS ts_us",
         f"{tb_expr} AS tb",
         f"{type_col} AS etype",
     )
