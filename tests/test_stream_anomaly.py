@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from tsdownsample_spark.operators.anomaly import rolling_zscore
 from tsdownsample_spark.streaming.stream_anomaly import stream_rolling_zscore
 
+SCHEMA = "event_type string, ts timestamp, value double"
+
 
 @pytest.mark.slow
 def test_stream_zscore_matches_batch(spark, tmp_path, sf_dir):
@@ -51,6 +53,13 @@ def _run(spark, tmp_path, stream, name, **kw):
     return spark.table(name).collect()
 
 
+def _stage(spark, tmp_path, batches):
+    flat = stage_batches(spark, tmp_path, batches, SCHEMA)
+    return (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(flat)
+    )
+
+
 def _batch(ev, impl, **kw):
     return (
         rolling_zscore(ev, x_col="ts", y_col="value", by=["event_type"],
@@ -88,16 +97,12 @@ def _assert_matches(got, exp, rel=1e-12):
 def test_constant_run_scores_nothing(spark, tmp_path):
     """A constant trailing frame has std exactly 0 and NULL z/is_anomaly
     in the stream, as in ``impl="frame"`` and ``"grouped"``."""
-    t = lambda s: (pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)).to_pydatetime()
-    lead = [("a", t(i), v) for i, v in enumerate((3.7, 11.2, 0.4))]
-    run = [("a", t(10 + i), 0.7) for i in range(40)]
-    schema = "event_type string, ts timestamp, value double"
-    flat = stage_batches(spark, tmp_path, [lead + run[:20], run[20:]], schema)
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(flat)
-    )
+    t = lambda s: pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)
+    lead = [("a", t(i).to_pydatetime(), v) for i, v in enumerate((3.7, 11.2, 0.4))]
+    run = [("a", t(10 + i).to_pydatetime(), 0.7) for i in range(40)]
+    stream = _stage(spark, tmp_path, [lead + run[:20], run[20:]])
     got = _run(spark, tmp_path, stream, "szscore_flat", window=10, min_obs=5)
-    ev = spark.createDataFrame(lead + run, schema)
+    ev = spark.createDataFrame(lead + run, SCHEMA)
     for impl in ("frame", "grouped"):
         exp = _batch(ev, impl, window=10, min_obs=5)
         # frame sums in its own order: mean/std agree to ~1e-9 there
@@ -121,23 +126,9 @@ def test_stream_zscore_all_late_batch_does_not_regress_state(spark, tmp_path):
         [("a", t(5).to_pydatetime() + pd.Timedelta(microseconds=1), 500.0)],  # all late
         [("a", t(30).to_pydatetime(), 100.0)],       # in-order spike
     ]
-    flat = stage_batches(spark, tmp_path, batches,
-                         "event_type string, ts timestamp, value double")
-    stream = (
-        spark.readStream.schema("event_type string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1).parquet(flat)
-    )
-    out = stream_rolling_zscore(
-        stream, x_col="ts", y_col="value", by=["event_type"], window=10, min_obs=5
-    )
-    q = (
-        out.writeStream.format("memory").queryName("szscore_late")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = {r["value"]: r for r in spark.table("szscore_late").collect()}
+    stream = _stage(spark, tmp_path, batches)
+    got = _run(spark, tmp_path, stream, "szscore_late", window=10, min_obs=5)
+    rows = {r["value"]: r for r in got}
     # the spike's trailing frame is the last 10 IN-ORDER values (0..4
     # cycle), NOT polluted by the late 500.0
     tail = np.array([(10 + i) % 5 for i in range(10)], dtype=float)
