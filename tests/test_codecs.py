@@ -87,6 +87,38 @@ class TestGorilla:
         )
 
 
+def test_spark_roundtrip_timestamp_ntz_session(spark):
+    """compress_series -> decompress_series is bit-identical under
+    ``spark.sql.timestampType=TIMESTAMP_NTZ``: the operator's cast to
+    microseconds names TIMESTAMP_LTZ, which ``unix_micros`` accepts (a
+    bare "timestamp" cast means NTZ there and fails DATATYPE_MISMATCH)."""
+    import struct
+
+    from conftest import timestamp_type
+
+    from tsdownsample_spark.operators.compress import (
+        compress_series,
+        decompress_series,
+    )
+
+    def canon(rows):
+        return sorted(
+            (r["doc_id"], r["ts"], struct.pack("<d", r["value"])) for r in rows
+        )
+
+    with timestamp_type(spark, "TIMESTAMP_NTZ"):
+        df = spark.range(900).selectExpr(
+            "CONCAT('d', CAST(id % 3 AS STRING)) AS doc_id",
+            "CAST(timestamp_micros(1704067200000000 + id * 137000001 + id * id) "
+            "AS TIMESTAMP) AS ts",
+            "SIN(CAST(id AS DOUBLE)) * 1e3 / 7 AS value",
+        )
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        comp = compress_series(df, x_col="ts", y_col="value", by=["doc_id"])
+        back = decompress_series(comp, by=["doc_id"], x_col="ts", y_col="value")
+        assert canon(back.collect()) == canon(df.collect())
+
+
 def test_spark_roundtrip(spark):
     import pandas as pd
 

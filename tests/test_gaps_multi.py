@@ -376,6 +376,41 @@ def test_sessionize_boundary_rule_and_gap_duality(spark):
     assert out.count() == n_gaps + df.select("k").distinct().count()
 
 
+def test_sessionize_durations_under_timestamp_ntz_session(spark):
+    """Session durations under ``spark.sql.timestampType=TIMESTAMP_NTZ``
+    equal the default session's (the duration's microsecond cast names
+    TIMESTAMP_LTZ; a bare "timestamp" cast fails DATATYPE_MISMATCH)."""
+    from conftest import timestamp_type
+
+    from tsdownsample_spark.operators.gaps import sessionize
+
+    rows = [
+        ("a", "2024-01-01 00:00:00"),
+        ("a", "2024-01-01 00:04:59.5"),
+        ("a", "2024-01-01 00:09:00"),
+        ("a", "2024-01-01 02:00:00"),
+        ("b", "2024-01-01 00:00:00"),
+        ("b", "2024-01-01 00:00:00.000001"),
+    ]
+
+    def durations():
+        df = spark.createDataFrame(rows, "k string, s string").select(
+            "k", F.col("s").cast("timestamp").alias("ts")
+        )
+        out = sessionize(df, x_col="ts", by=["k"], gap="5 minutes")
+        return dict(df.dtypes)["ts"], sorted(
+            (r["k"], r["n_events"], r["duration_s"]) for r in out.collect()
+        )
+
+    ltz_type, ltz = durations()
+    with timestamp_type(spark, "TIMESTAMP_NTZ"):
+        ntz_type, ntz = durations()
+    assert (ltz_type, ntz_type) == ("timestamp", "timestamp_ntz")
+    assert ntz == ltz == [
+        ("a", 1, 0.0), ("a", 3, 540.0), ("b", 2, 1e-06),
+    ]
+
+
 # ------------------------------------------------------- rolling_zscore
 
 

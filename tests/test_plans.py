@@ -52,6 +52,28 @@ def test_downsample_single_python_stage(spark):
     assert plan.count("MapInArrow") == 1 or plan.count("ArrowEvalPython") == 1
 
 
+def test_token_selector_reads_plain_parquet_in_task(spark, tmp_path):
+    """A plain Parquet input is read inside the Python task: the plan is
+    ``Range -> MapInArrow`` with no FileScan or ColumnarToRow, so the token
+    column never enters the JVM.  A composed input keeps
+    ``FileScan parquet -> MapInArrow``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"doc_id": ["a", "b"],
+                  "tokens": pa.array([[1, 5, 2, 7], [3, 1]], pa.list_(pa.int32()))}),
+        str(tmp_path / "part-0.parquet"),
+    )
+    df = spark.read.parquet(str(tmp_path))
+    in_task = _plan(downsample_tokens(df, 2, algo="minmax", output="select"))
+    assert "MapInArrow" in in_task and "Range" in in_task
+    assert "FileScan" not in in_task and "ColumnarToRow" not in in_task
+    pipe = _plan(downsample_tokens(df.where(F.col("doc_id") != "z"), 2, algo="minmax",
+                                   output="select"))
+    assert "FileScan parquet" in pipe
+    assert pipe.index("MapInArrow") < pipe.index("FileScan parquet")
+
 def test_dedup_exact_no_join_no_broadcast(spark, sf_dir):
     """Exact dedup is a single window over content_hash: no join operator,
     no broadcast of a per-document build side (unbounded at scale)."""

@@ -212,3 +212,47 @@ def test_regr_grouped_multiblock_matches_frame(spark):
          float_cols=["roll_slope", "roll_intercept", "roll_r2"],
          exact_cols=[],
          key=lambda r: (r["series_key"], r["ts"], r["value"]))
+
+
+def test_grouped_forms_under_dst_session_time_zone(spark):
+    """The grouped kernels read the time axis as UTC microseconds, as the
+    chunk column is computed: under a non-UTC session time zone, 400
+    five-minute points across the 2024-03-10 US DST switch come back as
+    the same 400 rows and values as ``impl="frame"`` (a kernel that read
+    the session-local wall clock dropped rows of the own-chunk filter)."""
+    from tsdownsample_spark.operators.rolling import (
+        rolling_time_distinct,
+        rolling_time_quantile,
+        rolling_time_regr,
+        rolling_time_stats,
+    )
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        # 2024-03-10 02:00 EST -> 03:00 EDT is 07:00 UTC; start 16 h before
+        start_us = 1710054000 * 10**6 - 16 * 3600 * 10**6
+        df = spark.range(400).selectExpr(
+            "CAST(id % 2 AS STRING) AS series_key",
+            f"timestamp_micros({start_us} + id * 300000000) AS ts",
+            "CAST((id * 7919) % 101 AS DOUBLE) / 10 AS value",
+            "CONCAT('u', CAST((id * 31) % 9 AS STRING)) AS user_id",
+        )
+        base = dict(x_col="ts", by=["series_key"], duration="30 minutes")
+        key = lambda r: (r["series_key"], r["ts"], r["value"])  # noqa: E731
+        cases = [
+            (rolling_time_stats, dict(y_col="value", min_obs=1),
+             ["roll_sum", "roll_mean", "roll_std"], ["roll_n", "roll_min", "roll_max"]),
+            (rolling_time_distinct, dict(y_col="user_id"), [], ["roll_distinct"]),
+            (rolling_time_quantile, dict(y_col="value", qs=(0.25, 0.5), min_obs=1),
+             ["roll_q25", "roll_q50"], []),
+            (rolling_time_regr, dict(y_col="value", min_obs=2),
+             ["roll_slope", "roll_intercept", "roll_r2"], []),
+        ]
+        for fn, kw, float_cols, exact_cols in cases:
+            a = fn(df, impl="frame", **base, **kw).collect()
+            b = fn(df, impl="grouped", **base, **kw).collect()
+            assert len(a) == len(b) == 400, (fn.__name__, len(a), len(b))
+            _cmp(a, b, float_cols=float_cols, exact_cols=exact_cols, key=key)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

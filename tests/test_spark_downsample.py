@@ -241,10 +241,13 @@ def test_output_select_matches_append(token_df):
 
 
 def test_scan_downsample_matches_operator(spark, tmp_path):
-    """Kernel-side scan source == the mapInArrow operator, across multiple
-    files / row groups and through a null row."""
+    """scan_downsample_tokens == downsample_tokens through the Arrow pipe
+    (a composed input) == the flat kernel on the pyarrow-read table, across
+    multiple files / row groups and through a null row."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    from test_intask_read import kernel_reference
 
     from tsdownsample_spark.sources.scan import scan_downsample_tokens
 
@@ -286,43 +289,14 @@ def test_scan_downsample_matches_operator(spark, tmp_path):
              None if r["sel_idx"] is None else tuple(r["sel_idx"]),
              None if r["sel_tokens"] is None else tuple(r["sel_tokens"]))
             for r in downsample_tokens(
-                spark.read.parquet(str(d)), n_out, algo=algo, output="select"
+                spark.read.parquet(str(d)).where(F.lit(True)), n_out, algo=algo,
+                output="select",
             ).collect()
         )
         assert got == exp, algo
-
-
-def test_plan_row_group_tasks_1k_files(tmp_path):
-    """Planner at 1k files: thread-pooled footer reads keep driver-side
-    planning bounded, and the greedy packing covers every row group
-    exactly once (no file read twice, none dropped)."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from tsdownsample_spark.sources.scan import plan_row_group_tasks
-
-    d = tmp_path / "many"
-    d.mkdir()
-    for i in range(1000):
-        pq.write_table(
-            pa.table(
-                {
-                    "doc_id": pa.array([i], type=pa.int64()),
-                    "tokens": pa.array([[1, 2, 3]], type=pa.list_(pa.int32())),
-                }
-            ),
-            d / f"part-{i:05d}.parquet",
-        )
-    t0 = time.time()
-    plan = plan_row_group_tasks(str(d), 64)
-    wall = time.time() - t0
-    covered = [(f, rg) for f, rgs in plan for rg in rgs]
-    assert len(covered) == len(set(covered)) == 1000
-    # generous bound for co-tenant swings; sequential cold footer reads at
-    # object-storage latencies would be minutes, local sequential ~2-3 s
-    assert wall < 20.0, wall
+        assert {doc: (i, t) for doc, i, t in got} == kernel_reference(
+            pq.read_table(str(d)), "tokens", n_out, algo
+        ), algo
 
 
 def test_downsample_series_max_points_guard(spark):

@@ -326,8 +326,9 @@ def select_and_gather(col, n_out: int, algo: str, gather: bool = True, **kw):
     when ``gather=True``, the gathered selected values (same list type as
     the input) picked while the flat buffers are at hand, so only n_out
     values per series ever leave this function.  One implementation for
-    operators.downsample's select mode and sources.scan's in-task reader —
-    a fix here (null rows, sliced-array offsets, dtype edges) reaches both.
+    every operators.downsample token shape, over the Arrow pipe and the
+    in-task Parquet read alike — a fix here (null rows, sliced-array
+    offsets, dtype edges) reaches all of them.
     """
     import pyarrow as pa
 

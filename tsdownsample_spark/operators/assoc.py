@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsdownsample_spark.operators.rolling import duration_to_micros
+from tsdownsample_spark.operators.timeutil import micros
 from tsdownsample_spark.plans.materialize import materialize_shared
 
 __all__ = ["session_association_rules"]
@@ -66,7 +67,7 @@ def session_association_rules(
     gap_us = duration_to_micros(gap)
     t_dtype = dict(df.dtypes)[x_col]
     tu = (
-        F.unix_micros(F.col(x_col).cast("timestamp"))
+        micros(F.col(x_col))
         if t_dtype.startswith("timestamp")
         else F.col(x_col).cast("long")
     )

@@ -25,6 +25,7 @@ from tsdownsample_spark.functions.codecs import (
     encode_dod,
     encode_gorilla,
 )
+from tsdownsample_spark.operators.timeutil import micros
 
 
 @pandas_udf("binary")
@@ -78,7 +79,7 @@ def compress_series(
     x_dtype = df.schema[x_col].dataType.simpleString()
     if x_dtype.startswith("timestamp"):
         # NTZ is reinterpreted in the session tz (UTC) — lossless either way
-        x_as_long = F.unix_micros(F.col(x_col).cast("timestamp"))
+        x_as_long = micros(F.col(x_col))
     else:
         x_as_long = F.col(x_col).cast("long")
     if chunk_span == "auto":

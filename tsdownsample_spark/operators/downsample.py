@@ -4,12 +4,16 @@ Two physical shapes, both shuffle-free where possible:
 
 * **Token-table form** ("no x" mode, BASELINE input_hint): one row per
   series, ``tokens: array<int32>``.  ``downsample_tokens`` is a *narrow map*
-  — ``mapInArrow`` computing selected indices per row.  The plan is
-  ``Scan -> MapInArrow``: zero shuffle, embarrassingly parallel across
-  partitions, scales linearly with executors.  Inside the map, the whole
-  Arrow batch of series is downsampled in one vectorized pass over the list
-  column's (values, offsets) buffers (kernels.flat).  ``impl="jvm"`` runs
-  the MinMax/M4/EveryNth selectors as Catalyst expressions instead.
+  — ``mapInArrow`` computing selected indices per row: zero shuffle,
+  embarrassingly parallel across partitions, scales linearly with
+  executors.  Over a plain Parquet scan the plan is
+  ``Range -> MapInArrow`` and each task reads its file splits with pyarrow
+  (sources/scan.py), so the token column never enters the JVM; any other
+  input keeps ``<input plan> -> MapInArrow`` over the JVM->Python Arrow
+  pipe.  Inside the map, the whole Arrow batch of series is downsampled in
+  one vectorized pass over the list column's (values, offsets) buffers
+  (kernels.flat).  ``impl="jvm"`` runs the MinMax/M4/EveryNth selectors as
+  Catalyst expressions instead.
 
 * **Long (exploded) form** ("with x" mode): rows ``(series key, x, y)``.
   ``downsample_series`` groups by the series key (one shuffle — unavoidable:
@@ -217,65 +221,73 @@ def _arrow_downsample_specs(
     specs: Sequence[tuple],
     tokens_col: str,
     output: str,
+    tasks: int | None = None,
     **kw,
 ) -> DataFrame:
     """Shared mapInArrow scaffolding for every token-table selector shape.
 
     ``specs`` = [(algo, n_out, idx_name, tok_name), ...]: each spec runs one
-    kernel over the SAME in-cache Arrow batch — the input is scanned and
-    shipped across the JVM->Python pipe exactly once however many specs
-    there are (the amortization downsample_tokens_multi / _pyramid exist
-    for).  ``output="select"`` drops ``tokens_col`` from the return leg and
-    gathers each spec's selected values while the flat buffers are at hand —
-    n_out per series back to the JVM instead of n.  One implementation so a
-    fix (nullable schema, null rows, sliced-batch offsets) reaches every
-    public variant.
+    kernel over the SAME Arrow batch — the input is read once however many
+    specs there are (the amortization downsample_tokens_multi / _pyramid
+    exist for).  ``output="select"`` drops ``tokens_col`` from the return
+    leg and gathers each spec's selected values while the flat buffers are
+    at hand — n_out per series back to the JVM instead of n.  One per-batch
+    body, ``_select``, so a fix (nullable schema, null rows, sliced-batch
+    offsets) reaches every public variant and both input paths:
+
+    * a plain Parquet scan is read inside the Python task
+      (sources/scan.py; ``tasks`` overrides its parallelism target);
+    * any other input crosses the JVM->Python Arrow pipe (``df.mapInArrow``).
     """
     import pyarrow as pa
 
     from pyspark.sql import types as T
 
     from tsdownsample_spark.kernels.flat import select_and_gather
+    from tsdownsample_spark.sources.scan import map_splits, plain_parquet_scan
 
     select_mode = output == "select"
+    columns = df.columns
     for _, _, idx_name, tok_name in specs:
-        if idx_name in df.columns:
+        if idx_name in columns:
             raise ValueError(f"column {idx_name!r} already exists")
-        if select_mode and tok_name in df.columns:
+        if select_mode and tok_name in columns:
             raise ValueError(f"column {tok_name!r} already exists")
-    base = df.drop(tokens_col) if select_mode else df
+    fields = df.schema.fields
+    tok_idx = columns.index(tokens_col)
+    keep_idx = [
+        i for i in range(len(columns)) if not (select_mode and i == tok_idx)
+    ]
+    keep_names = [columns[i] for i in keep_idx]
     # built by hand so the output arrays are NULLABLE (null token rows
     # select null; an expr-derived schema would mark them non-null -> NPE)
-    elem_type = df.schema[tokens_col].dataType.elementType
+    elem_type = fields[tok_idx].dataType.elementType
     extra = []
     for _, _, idx_name, tok_name in specs:
         extra.append(T.StructField(idx_name, T.ArrayType(T.LongType())))
         if select_mode:
             extra.append(T.StructField(tok_name, T.ArrayType(elem_type)))
-    out_schema = T.StructType(list(base.schema.fields) + extra)
-    tok_idx = df.columns.index(tokens_col)
-    keep_idx = [
-        i for i, c in enumerate(df.columns) if not (select_mode and i == tok_idx)
-    ]
-    keep_names = [df.columns[i] for i in keep_idx]
+    out_schema = T.StructType([fields[i] for i in keep_idx] + extra)
 
-    def _map(batches):
-        for batch in batches:
-            cols = [batch.column(i) for i in keep_idx]
-            names = list(keep_names)
-            tok_col = batch.column(tok_idx)
-            for algo, n_out, idx_name, tok_name in specs:
-                sel_arr, tok_arr = select_and_gather(
-                    tok_col, n_out, algo, gather=select_mode, **kw
-                )
-                cols.append(sel_arr)
-                names.append(idx_name)
-                if select_mode:
-                    cols.append(tok_arr)
-                    names.append(tok_name)
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+    def _select(batch):
+        cols = [batch.column(i) for i in keep_idx]
+        names = list(keep_names)
+        tok_col = batch.column(tok_idx)
+        for algo, n_out, idx_name, tok_name in specs:
+            sel_arr, tok_arr = select_and_gather(
+                tok_col, n_out, algo, gather=select_mode, **kw
+            )
+            cols.append(sel_arr)
+            names.append(idx_name)
+            if select_mode:
+                cols.append(tok_arr)
+                names.append(tok_name)
+        return pa.RecordBatch.from_arrays(cols, names=names)
 
-    return df.mapInArrow(_map, out_schema)
+    scan = plain_parquet_scan(df, tasks)
+    if scan is not None:
+        return map_splits(df.sparkSession, scan, _select, out_schema)
+    return df.mapInArrow(lambda batches: map(_select, batches), out_schema)
 
 
 def downsample_tokens_multi(

@@ -20,6 +20,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsdownsample_spark.operators.timeutil import seconds_between
+
 __all__ = ["detect_gaps", "sessionize"]
 
 
@@ -37,8 +39,6 @@ def detect_gaps(
     arbitrarily but both orders yield the same (value-level) pairs, and a
     zero gap never passes the filter.  NULL ``x_col`` rows are ignored.
     """
-    from tsdownsample_spark.operators.timeutil import seconds_between
-
     by = list(by)
     w = Window.partitionBy(*by).orderBy(x_col)
     prev = F.lag(x_col).over(w)
@@ -83,10 +83,7 @@ def sessionize(
             F.count("*").cast("long").alias("n_events"),
         )
     )
-    dur = (
-        F.unix_micros(F.col("session_end").cast("timestamp"))
-        - F.unix_micros(F.col("session_start").cast("timestamp"))
-    ) / F.lit(1_000_000.0)
+    dur = seconds_between(F.col("session_end"), F.col("session_start"), "timestamp")
     return agg.select(
         *by, "session_start", "session_end", "n_events", dur.alias("duration_s")
     )

@@ -49,6 +49,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tsdownsample_spark.operators.timeutil import micros
+
 __all__ = ["interval_join"]
 
 # chunk="auto" never explodes one interval into more than ~this many rows
@@ -58,7 +60,7 @@ _MAX_CHUNKS_PER_INTERVAL = 256
 def _to_raw(c: Column, dtype: str) -> Column:
     """Orderable numeric view: microseconds for timestamps, raw otherwise."""
     if dtype.startswith("timestamp"):
-        return F.unix_micros(c.cast("timestamp"))
+        return micros(c)
     if dtype == "date":
         raise ValueError("date columns are not supported; cast to timestamp")
     return c

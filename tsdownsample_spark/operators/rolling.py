@@ -37,6 +37,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tsdownsample_spark.operators.timeutil import micros
+
 __all__ = [
     "rolling_time_stats",
     "rolling_time_quantile",
@@ -86,7 +88,7 @@ def _range_window(
     integer microseconds for timestamps or the raw value for numeric x."""
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        order = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
+        order = micros(F.col(x_col))
         span = duration_to_micros(duration)
     else:
         if not include_current and t_dtype not in (
@@ -144,17 +146,6 @@ def _grouped_span(df: DataFrame, x_col: str, duration: str) -> int:
     )
 
 
-def _x_micros(series) -> "object":
-    """Integer x axis from an applyInPandas column: µs for timestamps
-    (exact — Spark timestamps are µs-grain), the raw integers otherwise."""
-    import numpy as np
-
-    arr = series.to_numpy()
-    if arr.dtype.kind == "M":
-        return arr.astype("datetime64[us]").astype(np.int64)
-    return arr.astype(np.int64)
-
-
 def _frame_bounds(tu, span: int, include_current: bool):
     """Per-row [lo, hi) index bounds of the trailing RANGE frame over the
     SORTED integer axis ``tu``.  include_current=True is peer-inclusive
@@ -189,7 +180,7 @@ def _tuc_expr(df: DataFrame, x_col: str):
     """The integer x axis as a Column (µs for timestamps)."""
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        return F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
+        return micros(F.col(x_col))
     return F.col(x_col).cast("long")
 
 
@@ -223,14 +214,16 @@ def _grouped_apply(df: DataFrame, x_col, by, span, make_cols, new_fields,
         F.pmod(tuc, F.lit(width)) >= width - span,
         F.array(chk, chk + width),
     ).otherwise(F.array(chk))
-    src = df.withColumn("_chk", F.explode(ship))
+    # the kernel reads the axis as shipped integers: pandas would hand it
+    # timestamps as session-local wall clock, while _chk is UTC-based
+    src = df.withColumn("_tu", tuc.cast("long")).withColumn("_chk", F.explode(ship))
     in_fields = [f for f in df.schema.fields if f.name not in extra_drop]
     schema = StructType(in_fields + list(new_fields))
-    drop_cols = ["_chk", *extra_drop]
+    drop_cols = ["_tu", "_chk", *extra_drop]
 
     def kernel(pdf):
         k = int(pdf["_chk"].iloc[0])
-        tu_all = _x_micros(pdf[x_col])
+        tu_all = pdf["_tu"].to_numpy(dtype=np.int64)
         order = np.argsort(tu_all, kind="stable")
         pdf = pdf.iloc[order]
         tu = tu_all[order]
@@ -686,7 +679,7 @@ def rolling_time_stats(
     if impl == "prefix":
         t_dtype = dict(df.dtypes)[x_col]
         if t_dtype.startswith("timestamp"):
-            order = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
+            order = micros(F.col(x_col))
             span = duration_to_micros(duration)
         elif t_dtype in ("tinyint", "smallint", "int", "bigint"):
             order = F.col(x_col).cast("long")
@@ -883,7 +876,7 @@ def rolling_time_regr(
     w = _range_window(df, x_col, by, duration, include_current)
     t_dtype = dict(df.dtypes)[x_col]
     if t_dtype.startswith("timestamp"):
-        tu = F.unix_micros(F.col(x_col).cast("timestamp_ltz"))
+        tu = micros(F.col(x_col))
     else:
         tu = F.col(x_col).cast("double")
     wp = Window.partitionBy(*by)

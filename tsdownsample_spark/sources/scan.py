@@ -1,65 +1,60 @@
-"""Short-circuit parquet scan + downsample ("kernel-side scan").
+"""Plain Parquet read inside the Python task ("in-task read").
 
-``scan_downsample_tokens`` plans one Spark task per row-group batch; each
-task opens its parquet row groups DIRECTLY with pyarrow (column pruning
-pushed into the reader) and runs the flat selector kernel on the Arrow
-buffers — the bulk token data never crosses the JVM->Python Arrow socket.
-Output per series is only (keys..., sel_idx, sel_tokens): n_out values,
-not n.
+A token selector over a plain Parquet scan does not need the JVM to read
+the files: the plan ``Scan -> MapInArrow`` decodes every row group in the
+JVM and then ships the whole token column across the JVM->Python Arrow
+socket, while the selector returns only n_out values per series.
+:func:`plain_parquet_scan` recognises such an input at build time (a few
+py4j calls on the analyzed plan, no Spark job), plans its file splits with
+Spark's own split rule, and :func:`map_splits` runs
+``spark.range(n, numPartitions=n).mapInArrow(...)``: task ``i`` reads its
+splits with pyarrow (column-pruned) and hands the same Arrow batches to the
+caller's per-batch function.  Only the results cross a process boundary.
 
-When to use which path (measured on the bench host, 200 M pts, 32 cores):
+When to use which path (``operators/downsample.py`` decides; both run the
+same per-batch selector body):
 
-* ``downsample_tokens`` (operators/downsample.py) — composable inside any
-  DataFrame plan; Catalyst prunes/pushes the scan; costs one JVM->Python
-  Arrow hop for the token column (~180-190 M pts/s end-to-end here, pipe-
-  bound: the kernel itself overlaps to zero added wall time).
-* ``scan_downsample_tokens`` — a leaf source, not composable upstream; on
-  this bandwidth-capped host it matches the pipe path (~190 M pts/s), but
-  on hosts where the JVM hop is the binding constraint (fast NVMe, high
-  memory bandwidth, many cores) it removes that leg entirely.  It is also
-  the shape that generalizes to remote object storage: tasks fetch + decode
-  + reduce locally and ship back only selections.  At small sizes it is
-  slower, not equal: on a 480-document table (~7.7 M pts, 24 files) at
-  ``local[3]`` one minmax query took ~1.0 s against ~0.4 s for
-  ``downsample_tokens``.  Its fixed per-query steps (driver footer reads,
-  a ``createDataFrame`` of the task plan, a schema read, then a
-  ``repartition`` shuffle before the scan tasks) outweigh the Arrow hop it
-  saves (BENCH/BASELINE.md "Round-8").
+* **in-task read** — the input is ``spark.read.parquet(...)``, optionally
+  projected to plain columns, over local files with no partition columns,
+  bucketing or reader options, not cached, not streaming, and every column
+  of a type pyarrow and Spark's reader return identically (integral,
+  floating, boolean, string, arrays of integral or floating).  On the
+  480-document ``tok_preview`` table at ``local[3]`` a minmax query took
+  0.19-0.22 s against 0.32-0.44 s through the pipe, and a cycle's Arrow
+  traffic fell from 201 MB to 12 MB (BENCH/BASELINE.md "Round-11").  Each
+  task is a Python task, so where row groups are larger than the splits
+  the tasks that hold no row group still cost ~60 ms of a core each.
+* **Arrow pipe** (``df.mapInArrow``) — every other input: the only way to
+  consume an arbitrary plan (filters, joins, caches, other formats).
 
-Task planning: row groups are packed greedily into ``tasks`` batches by
-compressed byte size, so skewed row groups don't straggle.
+Splits and batches match Spark's own scan, so the task count and per-task
+memory do too: ``maxSplitBytes`` from ``spark.sql.files.maxPartitionBytes``,
+``openCostInBytes`` and the parallelism target; byte ranges packed
+next-fit-decreasing; a task reads the row groups whose midpoint falls in
+its range (parquet-mr's rule); and the per-batch function sees batches
+accumulated across row groups and files and cut at
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows or
+``maxBytesPerBatch`` bytes.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Sequence
+import re
+from typing import Callable, NamedTuple, Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def _list_parquet_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-    return [path]
 
 
 def parquet_footers(files: Sequence[str], max_workers: int = 16) -> list:
     """Parquet footer metadata for every file, read on a thread pool
     (pyarrow releases the GIL during footer I/O), in ``files`` order.
 
-    Driver-side planning cost is bounded by footer latency x files /
-    max_workers; on object storage each footer is a round-trip, so the
-    pool matters even more than locally.  Above ~10^4 files stop reading
-    footers at all: consult the table format's own metadata instead
-    (SnapshotTable manifests carry file lists; Iceberg manifests carry
-    per-file row counts and sizes) — plan_row_group_tasks is the
-    direct-parquet path, not the catalog path.
+    Driver-side cost is bounded by footer latency x files / max_workers;
+    on object storage each footer is a round-trip, so the pool matters even
+    more than locally.
     """
     import pyarrow.parquet as pq
 
@@ -72,33 +67,216 @@ def parquet_footers(files: Sequence[str], max_workers: int = 16) -> list:
         return list(ex.map(lambda f: pq.ParquetFile(f).metadata, files))
 
 
-def plan_row_group_tasks(path: str, tasks: int) -> list[tuple[str, list[int]]]:
-    """(file, row_group_ids) batches, greedily balanced by compressed size."""
-    files = _list_parquet_files(path)
-    per_file: list[tuple[str, int, int]] = []  # (file, rg, bytes)
-    for f, md in zip(files, parquet_footers(files)):
-        for rg in range(md.num_row_groups):
-            per_file.append((f, rg, md.row_group(rg).total_byte_size))
-    if not per_file:
-        raise ValueError(f"no parquet row groups under {path!r}")
-    tasks = max(1, min(tasks, len(per_file)))
-    # greedy: biggest row group into the lightest task (keeps files together
-    # only by accident — each (file, rg) is independent anyway)
-    buckets: list[list[tuple[str, int]]] = [[] for _ in range(tasks)]
-    load = [0] * tasks
-    for f, rg, sz in sorted(per_file, key=lambda t: -t[2]):
-        i = load.index(min(load))
-        buckets[i].append((f, rg))
-        load[i] += sz
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_FLOATING = (T.FloatType, T.DoubleType)
+
+
+def _same_in_pyarrow(dt: T.DataType) -> bool:
+    """Types that pyarrow and Spark's Parquet reader return identically."""
+    if isinstance(dt, T.ArrayType):
+        return isinstance(dt.elementType, _INTEGRAL + _FLOATING)
+    return isinstance(dt, _INTEGRAL + _FLOATING + (T.BooleanType, T.StringType))
+
+
+class ParquetSplits(NamedTuple):
+    """An in-task read: per task its ``(file, start, length)`` splits, and
+    per output column its Parquet column and Arrow type."""
+
+    tasks: list
+    names: list
+    columns: list
+    types: list
+    batch_rows: int
+    batch_bytes: int
+    case_sensitive: bool
+
+
+def _attrs(seq) -> list[tuple[str, int]]:
+    """(name, expression id) of each attribute of a Scala
+    ``Seq[Attribute]``, read in one py4j call (an attribute prints as
+    ``name#id`` plus a type suffix)."""
     out = []
-    for b in buckets:
-        if not b:
-            continue
-        by_file: dict[str, list[int]] = {}
-        for f, rg in b:
-            by_file.setdefault(f, []).append(rg)
-        out.extend((f, sorted(rgs)) for f, rgs in by_file.items())
+    for a in filter(None, seq.mkString("\u0000").split("\u0000")):
+        name, rest = a.rsplit("#", 1)
+        out.append((name, int(re.match(r"\d+", rest).group())))
     return out
+
+
+def plan_splits(sizes: Sequence[tuple[str, int]], max_partition_bytes: int,
+                open_cost: int, min_partitions: int,
+                max_partitions: int | None = None) -> list[list[tuple[str, int, int]]]:
+    """Spark's file-split rule (``FilePartition``): cut each file into byte
+    ranges of at most ``maxSplitBytes`` and pack them next-fit-decreasing,
+    charging ``open_cost`` per range."""
+    total = sum(size + open_cost for _, size in sizes)
+    max_split = min(max_partition_bytes, max(open_cost, total // max(1, min_partitions)))
+    splits = sorted(
+        ((f, off, min(max_split, size - off)) for f, size in sizes
+         for off in range(0, size, max_split)),
+        key=lambda s: -s[2],
+    )
+
+    def pack(limit):
+        parts, cur, cur_size = [], [], 0
+        for s in splits:
+            if cur and cur_size + s[2] > limit:
+                parts.append(cur)
+                cur, cur_size = [], 0
+            cur.append(s)
+            cur_size += s[2] + open_cost
+        return parts + [cur] if cur else parts
+
+    parts = pack(max_split)
+    if max_partitions and len(parts) > max_partitions:
+        per = sum(s[2] + open_cost for s in splits)
+        parts = pack(-(-per // max_partitions))
+    return parts
+
+
+def plain_parquet_scan(df: DataFrame, tasks: int | None = None) -> ParquetSplits | None:
+    """The in-task read of ``df`` if ``df`` is a plain Parquet scan (see the
+    module docstring), else None.  ``tasks`` overrides the parallelism
+    target that sizes the splits (Spark's ``defaultParallelism``)."""
+    jdf = getattr(df, "_jdf", None)
+    if jdf is None or df.isStreaming:
+        return None
+    fields = df.schema.fields
+    if not all(_same_in_pyarrow(f.dataType) for f in fields):
+        return None
+    # cached fragments of the plan show up here as InMemoryRelation
+    node = jdf.queryExecution().withCachedData()
+    out_ids = [i for _, i in _attrs(node.output())]
+    while (kind := node.getClass().getSimpleName()) in ("Project", "SubqueryAlias"):
+        if kind == "Project":
+            items = node.projectList()
+            if not all(items.apply(i).getClass().getSimpleName() == "AttributeReference"
+                       for i in range(items.length())):
+                return None
+        node = node.child()
+    if kind != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.partitionSchema().length()
+        or rel.bucketSpec().isDefined()
+    ):
+        return None
+    options = rel.options().keys().mkString("\u0000").split("\u0000")
+    if set(options) - {"", "path", "paths"}:
+        return None
+    by_id = {i: name for name, i in _attrs(node.output())}
+    if any(i not in by_id for i in out_ids):
+        return None
+    jvm = df.sparkSession._jvm
+    uris = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        rel.location().inputFiles()
+    ).mkString("\u0000")
+    files = []
+    for uri in filter(None, uris.split("\u0000")):
+        u = urlparse(uri)
+        if u.scheme != "file":
+            return None
+        files.append(unquote(u.path))
+    jspark = df.sparkSession._jsparkSession
+    conf = jspark.sessionState().conf()
+    if tasks is None:
+        floor = conf.filesMinPartitionNum()
+        tasks = floor.get() if floor.isDefined() else jspark.leafNodeDefaultParallelism()
+    cap = conf.filesMaxPartitionNum()
+    plan = plan_splits(
+        [(f, os.path.getsize(f)) for f in files],
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        tasks,
+        cap.get() if cap.isDefined() else None,
+    )
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return ParquetSplits(
+        tasks=[[(f, int(a), int(n)) for f, a, n in part] for part in plan],
+        names=[f.name for f in fields],
+        columns=[by_id[i] for i in out_ids],
+        types=[to_arrow_type(f.dataType) for f in fields],
+        batch_rows=conf.arrowMaxRecordsPerBatch(),
+        batch_bytes=conf.arrowMaxBytesPerBatch(),
+        case_sensitive=conf.caseSensitiveAnalysis(),
+    )
+
+
+def _row_group_midpoint(rg) -> int:
+    """parquet-mr's split rule: a row group belongs to the split holding
+    its first column chunk's start plus half its compressed size."""
+    first = rg.column(0)
+    start = first.data_page_offset
+    if first.has_dictionary_page:
+        start = min(start, first.dictionary_page_offset)
+    size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+    return start + size // 2
+
+
+def read_splits(scan: ParquetSplits, splits: Sequence[tuple[str, int, int]]):
+    """Task side: yield RecordBatches (``scan.names`` columns, ``scan.types``
+    types) from ``splits``, accumulated across row groups and files and cut,
+    as Spark cuts the pipe's batches, at ``scan.batch_rows`` rows or once
+    they hold ``scan.batch_bytes`` bytes.  A column missing from a file
+    reads as nulls, as in Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    max_rows = scan.batch_rows if scan.batch_rows > 0 else 1 << 62
+    max_bytes = scan.batch_bytes if scan.batch_bytes > 0 else 1 << 62
+    pending = []
+
+    def emit(n):
+        tbl = pa.Table.from_batches(pending).combine_chunks()
+        pending[:] = tbl.slice(n).to_batches()
+        return tbl.slice(0, n).to_batches()[0]
+
+    for path, start, length in splits:
+        pf = pq.ParquetFile(path)
+        md = pf.metadata
+        rgs = [g for g in range(md.num_row_groups)
+               if start <= _row_group_midpoint(md.row_group(g)) < start + length]
+        if not rgs:
+            continue
+        have = pf.schema_arrow.names
+        fold = {} if scan.case_sensitive else {n.lower(): n for n in have}
+        src = [c if c in have else fold.get(c.lower()) for c in scan.columns]
+        read = sorted({c for c in src if c is not None}, key=have.index)
+        # read in steps small enough for the byte cap to cut between them
+        row_bytes = max(md.row_group(g).total_byte_size / max(1, md.row_group(g).num_rows)
+                        for g in rgs)
+        step = int(max(1, min(max_rows, 1 << 20, max_bytes // max(1.0, row_bytes))))
+        for b in pf.iter_batches(batch_size=step, row_groups=rgs, columns=read,
+                                 use_threads=False):
+            cols = [pa.nulls(b.num_rows, t) if c is None
+                    else b.column(read.index(c)).cast(t)
+                    for c, t in zip(src, scan.types)]
+            pending.append(pa.RecordBatch.from_arrays(cols, names=scan.names))
+            while sum(p.num_rows for p in pending) >= max_rows:
+                yield emit(max_rows)
+            if sum(p.nbytes for p in pending) >= max_bytes:
+                yield emit(sum(p.num_rows for p in pending))
+    held = sum(p.num_rows for p in pending)
+    if held:
+        yield emit(held)
+
+
+def map_splits(spark: SparkSession, scan: ParquetSplits,
+               fn: Callable, schema: T.StructType) -> DataFrame:
+    """``fn`` over every batch of the in-task read: one Spark task per
+    split group, ``spark.range(n, numPartitions=n).mapInArrow(...)``."""
+
+    def _task(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                for batch in read_splits(scan, scan.tasks[i]):
+                    yield fn(batch)
+
+    n = len(scan.tasks)
+    return spark.range(n, numPartitions=max(1, n)).mapInArrow(_task, schema)
 
 
 def scan_downsample_tokens(
@@ -111,55 +289,21 @@ def scan_downsample_tokens(
     tasks: int | None = None,
     **kw,
 ) -> DataFrame:
-    """Downsample every series of a parquet token table without shipping the
-    token column through the JVM: returns (keys..., sel_idx, sel_tokens).
+    """Downsample every series of a Parquet token table:
+    returns (keys..., sel_idx, sel_tokens).
 
-    ``tasks`` defaults to 2x the scheduler's default parallelism.  Only
-    ``keys`` + ``tokens_col`` are read (column pruning in pyarrow).
+    ``downsample_tokens(spark.read.parquet(path).select(*keys, tokens_col),
+    output="select")``, which reads the files inside the Python task.
+    ``tasks`` overrides the parallelism target of the split plan (default:
+    Spark's ``defaultParallelism``, as Spark's own scan).
     """
-    from tsdownsample_spark.operators.downsample import _validate
+    from tsdownsample_spark.operators.downsample import _arrow_downsample_specs, _validate
     from tsdownsample_spark.plans.shipping import ship_package
 
     _validate(algo, n_out)
     ship_package(spark)
-    keys = list(keys)
-    if tasks is None:
-        tasks = 2 * spark.sparkContext.defaultParallelism
-    plan = plan_row_group_tasks(path, tasks)
-    tasks_df = spark.createDataFrame(
-        plan, "file string, rgs array<int>"
-    ).repartition(len(plan))
-
-    # output schema: key columns with their Spark-mapped types + selections
-    src_schema = spark.read.parquet(path).schema
-    elem_type = src_schema[tokens_col].dataType.elementType
-    out_schema = T.StructType(
-        [src_schema[k] for k in keys]
-        + [
-            T.StructField("sel_idx", T.ArrayType(T.LongType())),
-            T.StructField("sel_tokens", T.ArrayType(elem_type)),
-        ]
+    df = spark.read.parquet(path).select(*keys, tokens_col)
+    return _arrow_downsample_specs(
+        df, [(algo, n_out, "sel_idx", "sel_tokens")], tokens_col, "select",
+        tasks=tasks, **kw,
     )
-    read_cols = keys + [tokens_col]
-
-    def _scan(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from tsdownsample_spark.kernels.flat import select_and_gather
-
-        for b in batches:
-            for fname, rgs in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                tbl = pq.ParquetFile(fname).read_row_groups(
-                    rgs, columns=read_cols, use_threads=False
-                )
-                sel_arr, tok_arr = select_and_gather(
-                    tbl.column(tokens_col), n_out, algo, **kw
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [tbl.column(k).combine_chunks() for k in keys] + [sel_arr, tok_arr],
-                    names=keys + ["sel_idx", "sel_tokens"],
-                )
-
-    return tasks_df.mapInArrow(_scan, out_schema)
