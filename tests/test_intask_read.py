@@ -223,12 +223,45 @@ def test_file_split_across_tasks(spark, tmp_path):
         scan = plain_parquet_scan(df)
         big = str(d / "part-0.parquet")
         assert sum(1 for t in scan.tasks for f, _, _ in t if f == big) > 2
-        assert len(scan.tasks) == df.rdd.getNumPartitions()
+        assert len(scan.tasks) <= df.rdd.getNumPartitions()
+        assert all(sum(b.num_rows for b in read_splits(scan, t)) for t in scan.tasks)
         got = downsample_tokens(df, 40, algo="minmaxlttb", output="select")
         assert got.rdd.getNumPartitions() == len(scan.tasks)
         assert selections(got, "sel_idx", "sel_tokens") == \
             kernel_reference(table, "tokens", 40, "minmaxlttb")
         assert got.count() == table.num_rows
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+
+
+def test_splits_without_a_row_group_plan_no_task(spark, tmp_path, monkeypatch):
+    """A file cut into more splits than it has row groups leaves splits
+    that read nothing: the driver reads the footer of that file alone and
+    plans no task for them."""
+    from tsdownsample_spark.sources import scan as scan_mod
+
+    d = tmp_path / "wide"
+    d.mkdir()
+    big = str(d / "part-0.parquet")
+    pq.write_table(token_table(9, 400, "w"), big, row_group_size=200)
+    pq.write_table(token_table(10, 5, "s"), str(d / "part-1.parquet"))
+    table = pq.read_table(str(d))
+    footers = []
+    real = scan_mod.parquet_footers
+    monkeypatch.setattr(scan_mod, "parquet_footers",
+                        lambda files: footers.extend(files) or real(files))
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 * 1024))
+    try:
+        df = spark.read.parquet(str(d))
+        scan = plain_parquet_scan(df)
+        assert footers == [big]
+        assert len(scan.tasks) == 3 < df.rdd.getNumPartitions()
+        assert all(sum(b.num_rows for b in read_splits(scan, t)) for t in scan.tasks)
+        got = downsample_tokens(df, 41, algo="lttb", output="select")
+        assert got.rdd.getNumPartitions() == 3
+        assert selections(got, "sel_idx", "sel_tokens") == \
+            kernel_reference(table, "tokens", 41, "lttb")
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 

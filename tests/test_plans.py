@@ -74,6 +74,7 @@ def test_token_selector_reads_plain_parquet_in_task(spark, tmp_path):
     assert "FileScan parquet" in pipe
     assert pipe.index("MapInArrow") < pipe.index("FileScan parquet")
 
+
 def test_dedup_exact_no_join_no_broadcast(spark, sf_dir):
     """Exact dedup is a single window over content_hash: no join operator,
     no broadcast of a per-document build side (unbounded at scale)."""

@@ -21,9 +21,7 @@ same per-batch selector body):
   floating, boolean, string, arrays of integral or floating).  On the
   480-document ``tok_preview`` table at ``local[3]`` a minmax query took
   0.19-0.22 s against 0.32-0.44 s through the pipe, and a cycle's Arrow
-  traffic fell from 201 MB to 12 MB (BENCH/BASELINE.md "Round-11").  Each
-  task is a Python task, so where row groups are larger than the splits
-  the tasks that hold no row group still cost ~60 ms of a core each.
+  traffic fell from 201 MB to 12 MB (BENCH/BASELINE.md "Round-11").
 * **Arrow pipe** (``df.mapInArrow``) — every other input: the only way to
   consume an arbitrary plan (filters, joins, caches, other formats).
 
@@ -34,7 +32,11 @@ next-fit-decreasing; a task reads the row groups whose midpoint falls in
 its range (parquet-mr's rule); and the per-batch function sees batches
 accumulated across row groups and files and cut at
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows or
-``maxBytesPerBatch`` bytes.
+``maxBytesPerBatch`` bytes.  One difference: where a file is cut into
+several splits, the driver reads that file's footer and drops the splits
+that hold no row-group midpoint, and the tasks they leave empty, because
+an empty Python task still costs tens of ms of a core.  Files read whole
+need no footer on the driver.
 """
 
 from __future__ import annotations
@@ -192,10 +194,24 @@ def plain_parquet_scan(df: DataFrame, tasks: int | None = None) -> ParquetSplits
         tasks,
         cap.get() if cap.isDefined() else None,
     )
+    # A split that holds no row-group midpoint reads nothing, yet its Python
+    # task costs tens of ms of a core where Spark's JVM task costs about a
+    # footer read.  Only a file cut into several splits can leave one
+    # empty, so read just those footers and drop the splits and tasks left
+    # empty.
+    cut = sorted({f for part in plan for f, off, _ in part if off})
+    if cut:
+        mids = {f: _row_group_midpoints(md) for f, md in zip(cut, parquet_footers(cut))}
+
+        def holds_row_group(f, start, length):
+            return f not in mids or any(start <= m < start + length for m in mids[f])
+
+        plan = [kept for part in plan if (kept := [s for s in part if holds_row_group(*s)])]
+
     from pyspark.sql.pandas.types import to_arrow_type
 
     return ParquetSplits(
-        tasks=[[(f, int(a), int(n)) for f, a, n in part] for part in plan],
+        tasks=plan,
         names=[f.name for f in fields],
         columns=[by_id[i] for i in out_ids],
         types=[to_arrow_type(f.dataType) for f in fields],
@@ -205,15 +221,19 @@ def plain_parquet_scan(df: DataFrame, tasks: int | None = None) -> ParquetSplits
     )
 
 
-def _row_group_midpoint(rg) -> int:
+def _row_group_midpoints(md) -> list[int]:
     """parquet-mr's split rule: a row group belongs to the split holding
     its first column chunk's start plus half its compressed size."""
-    first = rg.column(0)
-    start = first.data_page_offset
-    if first.has_dictionary_page:
-        start = min(start, first.dictionary_page_offset)
-    size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
-    return start + size // 2
+    out = []
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        first = rg.column(0)
+        start = first.data_page_offset
+        if first.has_dictionary_page:
+            start = min(start, first.dictionary_page_offset)
+        size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+        out.append(start + size // 2)
+    return out
 
 
 def read_splits(scan: ParquetSplits, splits: Sequence[tuple[str, int, int]]):
@@ -235,30 +255,30 @@ def read_splits(scan: ParquetSplits, splits: Sequence[tuple[str, int, int]]):
         return tbl.slice(0, n).to_batches()[0]
 
     for path, start, length in splits:
-        pf = pq.ParquetFile(path)
-        md = pf.metadata
-        rgs = [g for g in range(md.num_row_groups)
-               if start <= _row_group_midpoint(md.row_group(g)) < start + length]
-        if not rgs:
-            continue
-        have = pf.schema_arrow.names
-        fold = {} if scan.case_sensitive else {n.lower(): n for n in have}
-        src = [c if c in have else fold.get(c.lower()) for c in scan.columns]
-        read = sorted({c for c in src if c is not None}, key=have.index)
-        # read in steps small enough for the byte cap to cut between them
-        row_bytes = max(md.row_group(g).total_byte_size / max(1, md.row_group(g).num_rows)
-                        for g in rgs)
-        step = int(max(1, min(max_rows, 1 << 20, max_bytes // max(1.0, row_bytes))))
-        for b in pf.iter_batches(batch_size=step, row_groups=rgs, columns=read,
-                                 use_threads=False):
-            cols = [pa.nulls(b.num_rows, t) if c is None
-                    else b.column(read.index(c)).cast(t)
-                    for c, t in zip(src, scan.types)]
-            pending.append(pa.RecordBatch.from_arrays(cols, names=scan.names))
-            while sum(p.num_rows for p in pending) >= max_rows:
-                yield emit(max_rows)
-            if sum(p.nbytes for p in pending) >= max_bytes:
-                yield emit(sum(p.num_rows for p in pending))
+        with pq.ParquetFile(path) as pf:
+            md = pf.metadata
+            rgs = [g for g, m in enumerate(_row_group_midpoints(md))
+                   if start <= m < start + length]
+            if not rgs:
+                continue
+            have = pf.schema_arrow.names
+            fold = {} if scan.case_sensitive else {n.lower(): n for n in have}
+            src = [c if c in have else fold.get(c.lower()) for c in scan.columns]
+            read = sorted({c for c in src if c is not None}, key=have.index)
+            # read in steps small enough for the byte cap to cut between them
+            row_bytes = max(md.row_group(g).total_byte_size / max(1, md.row_group(g).num_rows)
+                            for g in rgs)
+            step = int(max(1, min(max_rows, 1 << 20, max_bytes // max(1.0, row_bytes))))
+            for b in pf.iter_batches(batch_size=step, row_groups=rgs, columns=read,
+                                     use_threads=False):
+                cols = [pa.nulls(b.num_rows, t) if c is None
+                        else b.column(read.index(c)).cast(t)
+                        for c, t in zip(src, scan.types)]
+                pending.append(pa.RecordBatch.from_arrays(cols, names=scan.names))
+                while sum(p.num_rows for p in pending) >= max_rows:
+                    yield emit(max_rows)
+                if sum(p.nbytes for p in pending) >= max_bytes:
+                    yield emit(sum(p.num_rows for p in pending))
     held = sum(p.num_rows for p in pending)
     if held:
         yield emit(held)
